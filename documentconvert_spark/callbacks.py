@@ -97,8 +97,11 @@ def http_post_transport(url: str, body: bytes) -> Tuple[int, str]:
 def _url_host(url_col):
     # try_parse_url: a malformed URL must become a NULL-host partition
     # key, not an ANSI INVALID_URL crash of the whole dispatch job (the
-    # POST itself then fails row-locally and lands in the delivery log)
-    return F.try_parse_url(url_col, F.lit("HOST"))
+    # POST itself then fails row-locally and lands in the delivery log).
+    # HOST keeps case and drops port/userinfo; host names are
+    # case-insensitive, so lower() makes Recv.test and recv.test one host
+    # for partitioning, the cap window, the sort and the pacing alike
+    return F.lower(F.try_parse_url(url_col, F.lit("HOST")))
 
 
 class CallbackLog(StateStore):
@@ -254,7 +257,9 @@ def dispatch_callbacks(
         # log.append would commit an EMPTY run directory on every cron'd
         # invocation forever while nothing drains
         raise ValueError(f"max_per_host must be >= 1, got {max_per_host}")
-    todo = todo.select(*payload_cols)
+    # the host key is computed once and shipped to deliver() as data, so
+    # the pacing rule compares exactly the key the layout sorted by
+    todo = todo.select(*payload_cols, _url_host("callback_url").alias("host"))
     if max_per_host is not None:
         # politeness cap: at most ~N deliveries per host per dispatch
         # run. Rows beyond the cap simply don't reach the log this run,
@@ -268,7 +273,7 @@ def dispatch_callbacks(
         # N lowest doc_ids per host; sharded, each shard keeps its own
         # lowest ceil(N/shards), totalling <= N + shards - 1.
         salt = F.pmod(F.xxhash64("doc_id"), F.lit(host_shards))
-        wcap = Window.partitionBy(_url_host("callback_url"), salt).orderBy("doc_id")
+        wcap = Window.partitionBy("host", salt).orderBy("doc_id")
         per_shard = -(-max_per_host // host_shards)
         todo = (
             todo.withColumn("_hrn", F.row_number().over(wcap))
@@ -282,8 +287,6 @@ def dispatch_callbacks(
 
     def deliver(batches: Iterator) -> Iterator:
         import pandas as pd
-
-        from urllib.parse import urlsplit
 
         prev_host: object = None
         for pdf in batches:
@@ -300,21 +303,12 @@ def dispatch_callbacks(
                     # pacing them against each other would serialize
                     # them for no benefit (per-host rows ARE contiguous
                     # within a partition: _dispatch_partitioning sorts
-                    # within partitions by host, so same-host == prev row)
-                    try:
-                        # hostname, not netloc: the partition/sort key is
-                        # parse_url HOST (no port/userinfo), so a receiver
-                        # whose URLs vary in port must still pace as ONE
-                        # host — netloc would compare unequal and silently
-                        # skip every sleep for exactly that receiver
-                        this_host = urlsplit(row.callback_url).hostname
-                    except ValueError:
-                        this_host = row.callback_url
-                    if this_host is None:
-                        this_host = row.callback_url
-                    if prev_host is not None and this_host == prev_host:
+                    # within partitions by host, so same-host == prev row).
+                    # A NULL host (malformed URL) never pauses: its POST
+                    # fails locally without reaching any receiver
+                    if prev_host is not None and row.host == prev_host:
                         sleep(per_post_delay_s)
-                    prev_host = this_host
+                    prev_host = row.host
                 body = json.dumps(
                     {
                         "task_id": row.doc_id,

@@ -665,6 +665,11 @@ def ocr_gray_text(w: int, h: int, gray: list[bytearray]) -> list[str]:
     # threshold is global: every band's candidate ladder contains
     # min(all_quotients) (s_global is always a quotient — the tallest
     # band is clean by the gate above).
+    # Known limitation: two NARROW glyphs (ink well under GLYPH_W
+    # columns each) kerned into each other can merge into a column box
+    # no wider than GLYPH_W * s, so the trigger does not fire and such a
+    # render is rejected as a whole instead of decoded. That is a
+    # coverage gap, not a wrong-text risk: the reject returns no text.
     wide = GLYPH_W * min(all_quotients)
     if not any(b[1] - b[0] > wide for boxes in col_boxes for b in boxes):
         return []

@@ -363,8 +363,7 @@ def train_two_level_kmeans(emb_df, k1: int, k2: int, iters: int = 2,
 
 
 def semdedup_prune_hierarchical(emb_df, k1: int, k2: int, tau: float = 0.4,
-                                iters: int = 2, return_cache_handle: bool = False,
-                                persist: bool = True):
+                                iters: int = 2, return_cache_handle: bool = False):
     """SemDeDup prune set over the two-level quantizer: same pair
     semantics as semdedup_prune (lower-id keeper, lowest-keeper ties,
     tau cosine threshold) with cluster = leaf cell. The production
@@ -373,15 +372,15 @@ def semdedup_prune_hierarchical(emb_df, k1: int, k2: int, tau: float = 0.4,
     certifies the pair semantics, the planted-near-dup test pins
     flat/hierarchical agreement on true duplicates.
 
-    With return_cache_handle=True returns (prune_df, vecs): `vecs` is
-    the persisted per-vector assignment frame train_two_level_kmeans
-    pins (the whole corpus's vectors) — callers that materialize the
-    prune set MUST unpersist it afterwards or it stays cached for the
-    app lifetime (same protocol as functions.unigram_logprob_table).
-    persist=False skips the cache — for stateless callers (the contract
-    query) that cannot unpersist."""
+    The per-vector assignment frame (the whole corpus's vectors) is
+    persisted only when the caller takes the handle: with
+    return_cache_handle=True returns (prune_df, vecs), and callers that
+    materialize the prune set MUST unpersist `vecs` afterwards (same
+    protocol as functions.unigram_logprob_table). Without the handle
+    nothing is cached — the coarse assignment recomputes per leaf round
+    — so stateless callers (the contract query) leave no cache behind."""
     vecs, leaves = train_two_level_kmeans(
-        emb_df, k1=k1, k2=k2, iters=iters, persist=persist
+        emb_df, k1=k1, k2=k2, iters=iters, persist=return_cache_handle
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("l_id"))
     assign = (

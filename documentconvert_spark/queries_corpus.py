@@ -2037,12 +2037,11 @@ _SEMDEDUP_HIER_K = 4  # k1 = k2 = 4 -> 16 leaf cells at sf0.01 (500 vecs)
 
 def q_semdedup_hier_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # persist=False: a stateless contract query cannot unpersist after
-    # the driver materializes it, and the 123-query sweep would leak one
-    # corpus-sized cache per run; at contract SF the recompute is free
+    # no cache handle, so nothing is persisted: a stateless contract
+    # query cannot unpersist after the driver materializes it; at
+    # contract SF the recompute is free
     return _ops_semdedup_hier(
         emb_df, k1=_SEMDEDUP_HIER_K, k2=_SEMDEDUP_HIER_K, tau=_SEMDEDUP_TAU,
-        persist=False,
     )
 
 

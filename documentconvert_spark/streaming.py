@@ -395,113 +395,3 @@ def stream_click_attribution(
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {attribution_window_s} SECONDS")),
     ).select("purchase_id", F.col("p_user").alias("user_id"), "purchase_ts", "click_id", "click_ts", "click_value")
     return _start_append_to(joined, out_dir, checkpoint_dir)
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas variant (Spark 4 stateful-processor API)
-# ---------------------------------------------------------------------------
-
-try:  # the API and its RocksDB requirement are Spark 4+; degrade gracefully
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SessionizeProcessor(StatefulProcessor):
-        """Same sessionization algebra as `_sessionize_fn`, expressed in the
-        non-deprecated transformWithStateInPandas API: open sessions in a
-        ValueState of parallel arrays, watermark-driven finalization via
-        registered event-time timers. Requires the RocksDB state store
-        (`spark.sql.streaming.stateStore.providerClass`)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._open = handle.getValueState(
-                "open_sessions",
-                "starts array<bigint>, lasts array<bigint>, ns array<int>, nps array<int>",
-            )
-
-        def _load(self) -> list[tuple]:
-            v = self._open.get()
-            return list(zip(*v)) if v is not None else []
-
-        def _store_and_arm(self, keep: list[tuple], wm_ms: int) -> None:
-            # unlike setTimeoutTimestamp (which replaces), registerTimer
-            # ACCUMULATES — drop stale timers or the per-key timer state
-            # grows one entry per micro-batch
-            for t in list(self._handle.listTimers()):
-                self._handle.deleteTimer(t)
-            if keep:
-                self._open.update(tuple(list(col) for col in zip(*keep)))
-                next_close_ms = min(
-                    last // 1_000_000 + int(SESSION_GAP_S * 1000) for _, last, _, _ in keep
-                )
-                self._handle.registerTimer(max(next_close_ms, wm_ms + 1))
-            else:
-                self._open.clear()
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            gap_ns = int(SESSION_GAP_S * 1e9)
-            wm_ms = timerValues.getCurrentWatermarkInMs()
-            wm_ns = wm_ms * 1_000_000
-            sessions = self._load()
-            for pdf in rows:
-                sessions = _merge_sessions(
-                    sessions + _rows_to_sessions(pdf, gap_ns, wm_ns), gap_ns
-                )
-            emit, keep = _split_final(sessions, gap_ns, wm_ns)
-            self._store_and_arm(keep, wm_ms)
-            if emit:
-                yield _sessions_frame(user_id, emit)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (user_id,) = key
-            gap_ns = int(SESSION_GAP_S * 1e9)
-            wm_ms = timerValues.getCurrentWatermarkInMs()
-            emit, keep = _split_final(self._load(), gap_ns, wm_ms * 1_000_000)
-            self._store_and_arm(keep, wm_ms)
-            if emit:
-                yield _sessions_frame(user_id, emit)
-
-        def close(self) -> None:
-            pass
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pragma: no cover
-    HAS_TRANSFORM_WITH_STATE = False
-
-
-def stream_sessionize_tws(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "10 minutes",
-):
-    """`stream_sessionize` on the transformWithStateInPandas API — the
-    forward path (applyInPandasWithState is deprecated in Spark 4).
-    Caller must configure the RocksDB state store provider; tests set it
-    on the session conf before starting the query.
-
-    Environment note: the TWS Python runner requires a working
-    `google.protobuf`; where it is absent the applyInPandasWithState
-    variant (`stream_sessionize`) is the executable path — both share
-    the same session algebra (_rows_to_sessions/_merge_sessions/
-    _split_final), so semantics are identical."""
-    if not HAS_TRANSFORM_WITH_STATE:
-        raise RuntimeError(
-            "transformWithStateInPandas is unavailable in this PySpark build — "
-            "use stream_sessionize (applyInPandasWithState), which has identical semantics"
-        )
-    sessions = (
-        _events_stream(spark, input_dir, watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            SessionizeProcessor(),
-            outputStructType=SESSION_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-    return _start_append_to(sessions, out_dir, checkpoint_dir)

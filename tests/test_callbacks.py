@@ -546,3 +546,35 @@ def test_max_per_host_caps_per_run_and_spills_to_next(spark, tmp_path, call_dir)
     )
     assert len(_read_calls(call_dir)) == 5  # exactly once each overall
     assert pending_callbacks(store, log, "http://cb.example/hook").count() == 0
+
+    # one receiver spelled with two host cases (per-row URLs, even docs
+    # Recv.test, odd docs recv.test on another port): host names are
+    # case-insensitive, so both share ONE cap and are paced as one host
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    class UrlState(StateStore):
+        SCHEMA = T.StructType(
+            EXTRACTION_STATE.fields + [T.StructField("callback_url", T.StringType())]
+        )
+
+    mixed = UrlState(spark, str(tmp_path / "state_mixed"))
+    mixed.append(
+        store.read().withColumn(
+            "callback_url",
+            F.when(F.substring("doc_id", 2, 1).cast("int") % 2 == 0, "http://Recv.test/hook")
+            .otherwise("http://recv.test:8080/hook"),
+        ),
+        run_id="r1",
+    )
+    mixed_log = CallbackLog(spark, str(tmp_path / "cblog_mixed"))
+    for n in os.listdir(sleep_dir):
+        os.remove(os.path.join(sleep_dir, n))
+    dispatch_callbacks(
+        mixed, mixed_log, transport=t, sleep=recording_sleep,
+        max_per_host=2, per_post_delay_s=0.25,
+    )
+    assert {(r.doc_id, r.callback_url) for r in mixed_log.read().collect()} == {
+        ("d0", "http://Recv.test/hook"), ("d1", "http://recv.test:8080/hook"),
+    }
+    assert len(os.listdir(sleep_dir)) == 1  # d0 → d1: same host, one pause

@@ -4,12 +4,14 @@ predicates — nothing large is collected to the driver."""
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from documentconvert_spark.benchcorpus import build_bench_corpus
+from documentconvert_spark.kernels.markdown import spans_to_markdown
 from documentconvert_spark.kernels.spans import KINDS
 from documentconvert_spark.pipeline import extract_spans, size_aware_split
-from documentconvert_spark.udfs import spans_to_markdown_udf
 
 N = 3000
 
@@ -39,8 +41,14 @@ def test_scale_invariants(spark, tmp_path):
         | ((F.col("s.kind") == "figure") & (F.col("s.text") != ""))
     ).count() == 0
 
-    # markdown column == independent fold of the spans (round-trip)
-    mismatches = ok.withColumn("md2", spans_to_markdown_udf(F.col("spans"))).filter(
+    # markdown column == independent fold of the spans (round-trip). The
+    # UDF is local so that it is pickled by value: executor workers cannot
+    # import this test module.
+    @pandas_udf("string")
+    def _refold(spans: pd.Series) -> pd.Series:
+        return spans.map(lambda sp: None if sp is None else spans_to_markdown(list(sp)))
+
+    mismatches = ok.withColumn("md2", _refold(F.col("spans"))).filter(
         F.col("markdown") != F.col("md2")
     ).count()
     assert mismatches == 0

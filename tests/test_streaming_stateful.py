@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pandas as pd
-import pytest
 
 from documentconvert_spark.streaming import (
     EVENTS_SCHEMA,
@@ -156,48 +155,6 @@ def test_stream_stream_click_attribution(spark, tmp_path):
     # purchase 5 ← clicks 1 (25 min before) and 2 (5 min before);
     # purchase 6 ← click 4 (10 min before). Click 3: other user. No dups.
     assert got == [(5, 1), (5, 2), (6, 4)], got
-
-
-def test_stream_sessionize_tws_parity(spark, tmp_path):
-    """Same scenario on the transformWithStateInPandas variant (Spark 4
-    stateful-processor API, RocksDB state store)."""
-    from documentconvert_spark.streaming import HAS_TRANSFORM_WITH_STATE, stream_sessionize_tws
-
-    if not HAS_TRANSFORM_WITH_STATE:
-        pytest.skip("transformWithStateInPandas unavailable")
-    try:  # the TWS python runner speaks protobuf to the JVM
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf broken in this environment (TWS runner requires it)")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        input_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("landing", "out", "ckpt"))
-        wave1 = [_ev(1, 0.0, 1), _ev(2, 10.0, 1, "purchase"), _ev(3, 60.0, 1), _ev(4, 55.0, 2)]
-        wave2 = [_ev(5, 70.0, 2), _ev(6, 62.0, 1)]  # 62 is late, extends [60] backwards-in-arrival
-        _land(spark, wave1, input_dir)
-        stream_sessionize_tws(spark, input_dir, out_dir, ckpt).awaitTermination()
-        _land(spark, wave2, input_dir)
-        stream_sessionize_tws(spark, input_dir, out_dir, ckpt).awaitTermination()
-        for i, m in ((998, 60 * 24 * 10), (999, 60 * 24 * 20)):
-            _land(spark, [_ev(i, m, 9)], input_dir)
-            stream_sessionize_tws(spark, input_dir, out_dir, ckpt).awaitTermination()
-
-        got = {
-            (r.user_id, r.t_start, r.t_end, r.n_events, r.n_purchases)
-            for r in _read_out(spark, out_dir).collect()
-            if r.user_id != 9
-        }
-        expected = _oracle_sessions(wave1 + wave2, SESSION_GAP_S)
-        assert got == expected, f"got {sorted(got)}\nexpected {sorted(expected)}"
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 def test_stream_sessionize_stateful_parity(spark, tmp_path):
