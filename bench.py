@@ -274,6 +274,10 @@ def main() -> None:
             "exact brute-force baselines (bandwidth-bound); measured but "
             "excluded from value at sf>=1"
         )
+        # the pre-split headline (every query summed), so the series stays
+        # comparable with rounds that had no monitors key
+        result["value_with_monitors"] = round(
+            result["value"] + sum(monitors.values()), 3)
     if legs["n_extracted"]:
         result["extract_docs"] = legs["n_extracted"]
         result["docs_per_sec"] = round(legs["n_extracted"] / legs["extract_s"], 1)
@@ -282,6 +286,10 @@ def main() -> None:
         result["real_docs"] = legs["n_real"]
         result["real_docs_per_sec"] = round(legs["n_real"] / legs["real_s"], 1)
         result["real_docs_reps"] = legs["real_reps"]
+    elif not queries_only:
+        # never drop the leg silently: value then lacks real_docs_extract
+        result["real_docs"] = "absent"
+        result["real_docs_reason"] = f"no files under {REF_TEST_DIR}; the real-docs leg did not run"
     # the 10x/100x points: /root/testdata tops out at sf0.1 and fresh
     # sf1/sf10 runs add tens of minutes of wall per driver round, so those
     # suites run out-of-band (scripts/gen_sf.py + SPARK_GRAFT_SF_DIR) and

@@ -349,6 +349,38 @@ def dispatch_callbacks(
     return log.append(results)
 
 
+def deliver_callbacks(
+    state: StateStore,
+    log: Optional[str],
+    callback_url: str,
+    host_shards: int = 1,
+    per_post_delay_s: float = 0.0,
+    max_per_host: Optional[int] = None,
+) -> dict:
+    """dispatch_callbacks plus the per-run summary the callback-sending
+    jobs print: ``{"callback_run", "callbacks_delivered",
+    "callbacks_failed"}``, counted over THIS run's deliveries only (the
+    full log holds prior runs too). ``log`` is the delivery log path;
+    None means ``<state>_callbacks``. An empty state table or nothing
+    pending commits no run and reports ``callback_run: None``."""
+    log_store = CallbackLog(state.spark, log or state.path.rstrip("/") + "_callbacks")
+    cb_run = None if state.is_empty() else dispatch_callbacks(
+        state, log_store, callback_url=callback_url,
+        host_shards=host_shards,
+        per_post_delay_s=per_post_delay_s,
+        max_per_host=max_per_host,
+    )
+    if cb_run is None:
+        return {"callback_run": None, "callbacks_delivered": 0,
+                "callbacks_failed": 0}
+    row = log_store.read_run(cb_run).agg(
+        F.count(F.when(F.col("delivered"), 1)).alias("d"),
+        F.count(F.when(~F.col("delivered"), 1)).alias("f"),
+    ).first()
+    return {"callback_run": cb_run, "callbacks_delivered": row.d,
+            "callbacks_failed": row.f}
+
+
 def with_callback_status(state: StateStore, log: CallbackLog) -> DataFrame:
     """Latest state row per doc joined with its latest delivery result —
     the reference's task ``to_dict`` view (`models.py:120-123`)."""

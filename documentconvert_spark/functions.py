@@ -1,7 +1,7 @@
 """Shared, oracle-checked column expressions for the curation surface.
 
 Single source of truth: the driver-contract queries (queries_corpus.py)
-and the production job (jobs/run_curate.py) import THESE definitions, so
+and the production funnel (run_curation, jobs/run_curate.py) use THESE definitions, so
 the expressions the DuckDB oracle certifies are the expressions the job
 runs — they cannot silently diverge.
 
@@ -470,3 +470,159 @@ def gopher_gate(docs):
         reason.isNull().alias("keep"),
         reason.alias("fail_reason"),
     )
+
+
+# run_curation's keyword of the same name shadows this stage inside it
+_cap_stage = cap_per_source
+
+
+def run_curation(
+    docs,
+    output: str,
+    *,
+    quality_min: float = 0.5,
+    lm_min: float | None = None,
+    cap_per_source: int | None = None,
+    decontaminate_bench: str | None = None,
+    contamination_max: float = 0.05,
+    dup_frac_max: float | None = None,
+    mix_by_source: bool = False,
+    mix_budget_mille: int = 500,
+    gopher_gate: bool = False,
+    ppl_drop_tail: bool = False,
+    trim_length_tails: bool = False,
+    sample_en: int = 200,
+    sample_other: int = 400,
+    files: int = 64,
+) -> dict:
+    """The curation funnel jobs/run_curate.py runs: dedup → optional
+    stages → quality → sample/mix → sorted write of `docs` to `output`,
+    every stage one of the oracle-verified definitions above. Optional
+    stages are off unless their keyword is set. Returns the stage counts
+    in funnel order (``after_<stage>`` only for enabled stages), plus
+    ``kept_pct`` and ``output``."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from documentconvert_spark.tableio import read_table, write_sorted
+
+    summary = {"docs_in": docs.count()}
+    scored = with_curation_columns(docs)
+    w = Window.partitionBy("fingerprint").orderBy("doc_id")
+    # persist the post-dedup slice: three stage counts + the final write
+    # would otherwise re-execute the scan + tokenize + window shuffle
+    deduped = (
+        scored.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).persist()
+    )
+    summary["after_dedup"] = deduped.count()
+
+    if decontaminate_bench:
+        # same oracle-verified definitions as decontaminate_bloom: the
+        # benchmark folds into a constant-size broadcast bitmap; the
+        # contamination side table is (doc_id, 3 numerics)
+        filt = bloom_filter_words(read_table(docs.sparkSession, decontaminate_bench))
+        contaminated = (
+            bloom_contamination(deduped, filt)
+            .filter(F.col("est_contamination") > contamination_max)
+            .select("doc_id")
+        )
+        deduped = deduped.join(contaminated, "doc_id", "left_anti")
+        summary["after_decontamination"] = deduped.count()
+
+    if dup_frac_max is not None:
+        # same oracle-verified definition as dedup_exact_substrings; the
+        # stats side table is (doc_id, 3 numerics), docs without any
+        # duplicated shingle emit no row and always survive
+        over = (
+            duplicated_substring_stats(deduped)
+            .filter(F.col("dup_frac") > dup_frac_max)
+            .select("doc_id")
+        )
+        deduped = deduped.join(over, "doc_id", "left_anti")
+        summary["after_dup_frac"] = deduped.count()
+
+    if cap_per_source is not None:
+        # same oracle-verified definition as cap_per_source
+        deduped = _cap_stage(deduped, cap_per_source).drop("rank_in_source")
+        summary["after_source_cap"] = deduped.count()
+
+    filtered = deduped.filter(F.col("quality") >= quality_min)
+    summary["after_quality"] = filtered.count()
+
+    if gopher_gate:
+        # same oracle-verified ladder as quality_gopher_gate, applied as
+        # a pure column filter — no join, no shuffle
+        filtered = filtered.filter(gopher_fail_reason().isNull())
+        summary["after_gopher_gate"] = filtered.count()
+
+    stage_keep_sets = []  # tiny doc_id sets pinned until the final write
+
+    if lm_min is not None:
+        # LM stage: unigram model estimated from the post-dedup corpus
+        # (same oracle-verified definition as quality_unigram_logprob).
+        # The doc_id keep-set is materialized WHILE the (doc, term, k)
+        # aggregate is cached, then the big aggregate is freed — only the
+        # tiny keep-set stays pinned for the downstream counts + write
+        lm_tbl, lm_tf = unigram_logprob_table(filtered, return_cache_handle=True)
+        lm_keep = (lm_tbl.filter(F.col("avg_logprob") >= lm_min)
+                   .select("doc_id").persist())
+        lm_keep.count()
+        lm_tf.unpersist()
+        stage_keep_sets.append(lm_keep)
+        filtered = filtered.join(lm_keep, "doc_id", "left_semi")
+        summary["after_lm_filter"] = filtered.count()
+
+    if ppl_drop_tail:
+        # same oracle-verified definition as perplexity_buckets; same
+        # materialize-keep-set-then-free-the-aggregate protocol as lm_min
+        buckets, ppl_tf = perplexity_buckets(filtered, return_cache_handle=True)
+        tail = (buckets.filter(F.col("ppl_bucket") == "tail")
+                .select("doc_id").persist())
+        tail.count()
+        ppl_tf.unpersist()
+        stage_keep_sets.append(tail)
+        filtered = filtered.join(tail, "doc_id", "left_anti")
+        summary["after_ppl_tail_drop"] = filtered.count()
+
+    if trim_length_tails:
+        # bounds from the surviving corpus (same oracle-verified
+        # definition as filter_length_outliers); lang-cardinality side
+        bounds = length_outlier_bounds(filtered).select("lang", "lo_tokens", "hi_tokens")
+        filtered = (
+            filtered.withColumn("_nt", F.expr(f"size({TOKS})"))
+            .join(F.broadcast(bounds), "lang")
+            .filter(F.col("_nt").between(F.col("lo_tokens"), F.col("hi_tokens")))
+            .drop("_nt", "lo_tokens", "hi_tokens")
+        )
+        summary["after_length_trim"] = filtered.count()
+
+    if mix_by_source:
+        # same oracle-verified definition as mix_source_weights: rates
+        # are a |sources|-row broadcast dim; sampling stays narrow
+        rates = source_mix_rates(filtered, budget_mille=mix_budget_mille)
+        # null-safe join: a NULL-source group gets its own rate row and a
+        # plain `= source` join would silently drop those documents
+        r = rates.select(F.col("source").alias("_r_source"), "sample_mille")
+        sampled = (
+            filtered.join(
+                F.broadcast(r), filtered["source"].eqNullSafe(r["_r_source"])
+            )
+            .filter(F.expr(SAMPLE_HASH) < F.col("sample_mille"))
+            .drop("_r_source", "sample_mille")
+        )
+    else:
+        rate = F.when(F.col("lang") == "en", sample_en).otherwise(sample_other)
+        sampled = filtered.filter(F.expr(SAMPLE_HASH) < rate)
+    n_sampled = sampled.count()
+
+    out = sampled.drop("fingerprint", "_rn")
+    write_sorted(out, output, sort_cols=["doc_id"], n_files=files)
+    deduped.unpersist()
+    for ks in stage_keep_sets:
+        ks.unpersist()
+    return {
+        **summary,
+        "after_sampling": n_sampled,
+        "kept_pct": round(100.0 * n_sampled / max(summary["docs_in"], 1), 2),
+        "output": output,
+    }

@@ -397,3 +397,80 @@ def semdedup_prune_hierarchical(emb_df, k1: int, k2: int, tau: float = 0.4,
     )
     out = _semdedup_pairs(assign, tau)
     return (out, vecs) if return_cache_handle else out
+
+
+def build_ann_index(emb_df, output: str, *, k: int = 8, iters: int = 2,
+                    pq_m: int = 8, pq_k: int = 16, demo_queries: int = 0,
+                    semdedup_tau: float | None = None,
+                    semdedup_block: int = 256, files: int = 16) -> dict:
+    """The index build jobs/run_index.py runs: IVF centroids and
+    assignments, PQ codebooks and packed codes (plus the optional
+    SemDeDup prune table and nProbe=2 top-5 search demo) persisted as
+    parquet under `output`. Returns the job's summary counts."""
+    if pq_k > 16:
+        raise ValueError(f"--pq-k {pq_k} cannot pack into 4-bit nibbles (max 16)")
+    if pq_m > 15:
+        raise ValueError(f"--pq-m {pq_m} overflows the packed int64 code (max 15)")
+    n_vec = emb_df.count()
+
+    emb, cents = train_coarse_kmeans(emb_df, k=k, iters=iters)
+    cents.write.mode("overwrite").parquet(f"{output}/centroids")
+    n_cells = cents.count()
+
+    assign = ivf_assign(emb, cents)
+    assign.repartition(files).write.mode("overwrite").parquet(f"{output}/assignments")
+
+    # dim from the already-built emb frame: one cached-row lookup instead
+    # of letting pq_train trigger its own full-plan inference job
+    dim = len(emb.select("ve").first()["ve"])
+    if dim % pq_m:
+        raise ValueError(f"embedding dim {dim} not divisible by --pq-m {pq_m}")
+    _, sub, pq_cents = pq_train(emb_df, m=pq_m, ksub=pq_k, dsub=dim // pq_m, iters=iters)
+    pq_cents.write.mode("overwrite").parquet(f"{output}/pq_centroids")
+    packed = pq_pack(pq_codes(sub, pq_cents), m=pq_m, ksub=pq_k)
+    packed.repartition(files).write.mode("overwrite").parquet(f"{output}/codes")
+    dist = packed.agg(
+        F.count("*").alias("n"), F.round(F.avg("distortion"), 6).alias("avg_d")
+    ).collect()[0]
+    summary = {"vectors": n_vec, "ivf_cells": n_cells,
+               "coded_vectors": dist["n"], "avg_distortion": dist["avg_d"]}
+
+    if semdedup_tau is not None:
+        # SemDeDup with corpus-scaled k (same oracle-certified definition
+        # as the semdedup_prune contract query, which pins k=8 for the
+        # DuckDB oracle): k grows with n so the expected cluster size —
+        # and with it the within-cluster pair count — stays bounded at
+        # ~semdedup_block vectors, keeping total pair work linear
+        sem_cache = None
+        mode, k_sem = semdedup_plan(n_vec, block=semdedup_block)
+        if mode == "two-level":
+            # flat assignment is n*K sims — itself quadratic once K ∝ n.
+            # The two-level quantizer (k12² >= K leaves at n*2*k12
+            # assignment cost) keeps the whole stage O(n^1.5/sqrt(block))
+            prune, sem_cache = semdedup_prune_hierarchical(
+                emb_df, k1=k_sem, k2=k_sem, tau=semdedup_tau,
+                iters=iters, return_cache_handle=True,
+            )
+            sem_cells = k_sem * k_sem
+        elif k_sem == k:
+            prune = semdedup_prune(emb, cents, tau=semdedup_tau)
+            sem_cells = k_sem
+        else:
+            sem_emb, sem_cents = train_coarse_kmeans(emb_df, k=k_sem, iters=iters)
+            prune = semdedup_prune(sem_emb, sem_cents, tau=semdedup_tau)
+            sem_cells = k_sem
+        prune.repartition(files).write.mode("overwrite").parquet(f"{output}/semdedup_prune")
+        summary["semdedup_cells"] = sem_cells
+        summary["semdedup_pruned"] = (
+            emb_df.sparkSession.read.parquet(f"{output}/semdedup_prune").count())
+        if sem_cache is not None:
+            # release the corpus-sized assignment frame the hierarchical
+            # trainer pins once the prune table is on disk
+            sem_cache.unpersist()
+
+    if demo_queries > 0:
+        queries = emb.orderBy("vec_id").limit(demo_queries).select("vec_id")
+        topk = ivf_topk(emb, cents, queries, k=5, n_probe=2)
+        topk.write.mode("overwrite").parquet(f"{output}/demo_topk")
+        summary["demo_topk_rows"] = topk.count()
+    return {**summary, "output": output}

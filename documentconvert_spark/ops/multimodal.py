@@ -652,3 +652,107 @@ def real_audio_stats(audios: DataFrame) -> DataFrame:
 
     return audios.select("doc_id", "content").mapInPandas(
         stats, schema=AUDIO_STATS_SCHEMA)
+
+
+SNIFF_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("format", T.StringType(), False),
+        T.StructField("width", T.IntegerType(), True),
+        T.StructField("height", T.IntegerType(), True),
+        T.StructField("duration_ms", T.IntegerType(), True),
+    ]
+)
+
+
+def sniff_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas body: container metadata per blob, header-level only
+    (no decode); A/V containers first, then images, else `unknown`."""
+    from documentconvert_spark.kernels.media import sniff_av_meta, sniff_image_meta
+
+    for b in batches:
+        rows = {k: [] for k in ("doc_id", "format", "width", "height", "duration_ms")}
+        for did, blob in zip(b["doc_id"], b["content"]):
+            data = bytes(blob) if blob is not None else b""
+            fmt, w, h, dur = sniff_av_meta(data)
+            if fmt == "unknown":  # not an A/V container: try image
+                fmt, w, h = sniff_image_meta(data)
+                dur = None
+            rows["doc_id"].append(did)
+            rows["format"].append(fmt)
+            rows["width"].append(w)
+            rows["height"].append(h)
+            rows["duration_ms"].append(dur)
+        df = pd.DataFrame(rows)
+        for c in ("width", "height", "duration_ms"):
+            df[c] = pd.array(df[c], dtype="Int32")
+        yield df
+
+
+def curate_media(media: DataFrame, output: str, *, jaccard_num: int = 3,
+                 jaccard_den: int = 5, files: int = 16) -> dict:
+    """The media pass jobs/run_media.py runs over (doc_id, content):
+    sniff inventory → per-modality decode stats → near-dup pairs, each
+    written as parquet under `output`. Returns the job's summary counts."""
+    spark = media.sparkSession
+    media = media.select("doc_id", "content")
+    n_in = media.count()
+
+    # 1) sniff inventory — header-level only, no decode
+    inv = media.mapInPandas(sniff_media, schema=SNIFF_SCHEMA).cache()
+    inv.coalesce(files).write.mode("overwrite").parquet(output + "/inventory")
+    by_fmt = {r["format"]: r["n"] for r in
+              inv.groupBy("format").agg(F.count("*").alias("n")).collect()}
+
+    # 2) decode stats per modality — route on the sniffed format so the
+    # decoders see only bytes they own; errors stay per-row
+    video_ids = inv.filter(F.col("format").isin("avi", "gif")).select("doc_id")
+    audio_ids = inv.filter(F.col("format").isin("wav", "flac")).select("doc_id")
+    videos = media.join(F.broadcast(video_ids), "doc_id")
+    audios = media.join(F.broadcast(audio_ids), "doc_id")
+
+    vstats = real_video_frame_stats(videos).cache()
+    vstats.coalesce(files).write.mode("overwrite").parquet(output + "/video_frames")
+    n_frames = vstats.filter(F.col("error").isNull()).count()
+    astats = real_audio_stats(audios).cache()
+    astats.coalesce(files).write.mode("overwrite").parquet(output + "/audio_stats")
+    n_audio_ok = astats.filter(F.col("error").isNull()).count()
+
+    # 3) near-dup pairs per modality
+    vsig = (vstats.filter(F.col("error").isNull())
+            .select("doc_id",
+                    F.concat_ws(":", "width", "height", "n_dark").alias("sig"),
+                    "frame_idx"))
+    vpairs = multiset_jaccard_pairs(vsig, "sig", "frame_idx", jaccard_num, jaccard_den)
+    apairs = multiset_jaccard_pairs(audio_fingerprint_table(audios),
+                                    "fp", "chunk_idx", jaccard_num, jaccard_den)
+    vpairs.coalesce(1).write.mode("overwrite").parquet(output + "/video_pairs")
+    apairs.coalesce(1).write.mode("overwrite").parquet(output + "/audio_pairs")
+    n_vpairs = spark.read.parquet(output + "/video_pairs").count()
+    n_apairs = spark.read.parquet(output + "/audio_pairs").count()
+
+    # 4) image modality: decode + difference hash, banded Hamming pairs
+    image_ids = inv.filter(
+        F.col("format").isin("png", "jpeg", "gif", "bmp", "tiff", "webp")
+    ).select("doc_id")
+    images = media.join(F.broadcast(image_ids), "doc_id")
+    ihash = image_dhash_table(images).cache()
+    ihash.coalesce(files).write.mode("overwrite").parquet(output + "/image_dhash")
+    n_images = ihash.count()
+    ipairs = dhash_hamming_pairs(ihash)
+    ipairs.coalesce(1).write.mode("overwrite").parquet(output + "/image_pairs")
+    n_ipairs = spark.read.parquet(output + "/image_pairs").count()
+    for cached in (inv, vstats, astats, ihash):
+        cached.unpersist()  # the session may outlive this pass
+
+    return {
+        "docs_in": n_in,
+        "by_format": by_fmt,
+        "video_frames_decoded": n_frames,
+        "audio_decoded": n_audio_ok,
+        "images_hashed": n_images,
+        "video_dup_pairs": n_vpairs,
+        "audio_dup_pairs": n_apairs,
+        "image_dup_pairs": n_ipairs,
+        "output": output,
+    }

@@ -402,6 +402,47 @@ def run_extraction_job(
     )
 
 
+def run_extraction_rounds(
+    spark: SparkSession,
+    docs: DataFrame,
+    out_path: str,
+    state: StateStore,
+    rounds: int = 3,
+    target_partitions: int | None = None,
+    max_docs: int | None = None,
+) -> list[JobResult]:
+    """Up to ``rounds`` resumable passes of run_extraction_job, one
+    JobResult per pass. Failed docs are retried in the next round after an
+    exponential backoff (1/2/4 s — reference TASK_PROCESSING_GUIDE.md:89-93)
+    up to the per-doc attempt cap. ``max_docs`` bounds each round to a
+    batch (the reference fetch-worker polls `limit=max_concurrent_tasks`
+    pending tasks, enhanced_task_processor.py:259-307); rounds then drain
+    batches until one selects nothing, still capped by ``rounds``."""
+    results: list[JobResult] = []
+    backoff = 1.0
+    for rnd in range(1, rounds + 1):
+        r = run_extraction_job(
+            spark,
+            docs,
+            out_path,
+            state,
+            target_partitions=target_partitions,
+            max_docs=max_docs,
+        )
+        results.append(r)
+        if r.processed == 0:
+            break  # nothing left to select — corpus drained (or all terminal)
+        if r.failed == 0 and (max_docs is None or r.processed < max_docs):
+            # converged: an unbatched clean pass, or a clean PARTIAL batch
+            # (the selection found less than the batch bound, so nothing
+            # remains — skip the otherwise-wasted empty confirmation round)
+            break
+        if rnd < rounds and r.failed:
+            time.sleep(backoff)  # 1/2/4 s exponential backoff between retry rounds
+            backoff *= 2
+    return results
+
+
 def read_committed_output(
     spark: SparkSession,
     out_path: str,

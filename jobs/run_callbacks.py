@@ -10,7 +10,7 @@ touching the extraction pipeline.
 
 Submit:
 
-    spark-submit --master <cluster> \
+    spark-submit <cluster options> \
       --py-files dist/documentconvert_spark.zip \
       jobs/run_callbacks.py \
       --state <state table path> \
@@ -32,57 +32,31 @@ import _bootstrap  # noqa: F401  (self-sufficient launch; see jobs/_bootstrap.py
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    # absent flags stay unset, so deliver_callbacks's signature holds every default
+    ap = argparse.ArgumentParser(argument_default=argparse.SUPPRESS)
     ap.add_argument("--state", required=True)
     ap.add_argument("--callback-url", required=True)
-    ap.add_argument("--log", default=None,
-                    help="delivery log path (default: <state>_callbacks)")
-    ap.add_argument("--host-shards", type=int, default=1,
+    ap.add_argument("--log", help="delivery log path (default: <state>_callbacks)")
+    ap.add_argument("--host-shards", type=int,
                     help="split each host's deliveries across up to N "
                          "partitions (for load-balanced receivers; relaxes "
-                         "per-host ordering); default 1 = one partition "
-                         "per host")
-    ap.add_argument("--per-post-delay", type=float, default=0.0,
+                         "per-host ordering)")
+    ap.add_argument("--per-post-delay", type=float, dest="per_post_delay_s",
                     help="politeness pause in seconds between consecutive "
-                         "POSTs within a partition; default 0")
-    ap.add_argument("--max-per-host", type=int, default=None,
+                         "POSTs within a partition")
+    ap.add_argument("--max-per-host", type=int,
                     help="deliver at most N rows per host per invocation; "
                          "the remainder stays pending and the next "
                          "invocation's anti-join picks it up")
-    ap.add_argument("--master", default=None, help="override master (local testing)")
-    args = ap.parse_args()
+    opts = vars(ap.parse_args())
 
-    from documentconvert_spark.callbacks import CallbackLog, dispatch_callbacks
+    from documentconvert_spark.callbacks import deliver_callbacks
     from documentconvert_spark.session import build_session
     from documentconvert_spark.state import StateStore
 
-    spark = build_session(app_name="callbacks", master=args.master)
-    state = StateStore(spark, args.state)
-    log = CallbackLog(spark, args.log or args.state.rstrip("/") + "_callbacks")
-    if state.is_empty():
-        print(json.dumps({"callback_run": None, "callbacks_delivered": 0,
-                          "note": "state table empty"}))
-        spark.stop()
-        return
-    cb_run = dispatch_callbacks(
-        state, log, callback_url=args.callback_url,
-        host_shards=args.host_shards,
-        per_post_delay_s=args.per_post_delay,
-        max_per_host=args.max_per_host,
-    )
-    if cb_run is None:  # nothing pending — no run committed
-        print(json.dumps({"callback_run": None, "callbacks_delivered": 0,
-                          "callbacks_failed": 0}))
-        spark.stop()
-        return
-    from pyspark.sql import functions as F
-
-    row = log.read_run(cb_run).agg(
-        F.count(F.when(F.col("delivered"), 1)).alias("d"),
-        F.count(F.when(~F.col("delivered"), 1)).alias("f"),
-    ).first()
-    print(json.dumps({"callback_run": cb_run, "callbacks_delivered": row.d,
-                      "callbacks_failed": row.f}))
+    spark = build_session(app_name="callbacks")
+    state = StateStore(spark, opts.pop("state"))
+    print(json.dumps(deliver_callbacks(state, opts.pop("log", None), **opts)))
     spark.stop()
 
 

@@ -22,7 +22,7 @@ The batch pipeline a 100 TB corpus runs between crawling and training:
 Submit:
 
     scripts/make_pyfiles.sh
-    spark-submit --master <cluster> \
+    spark-submit <cluster options> \
       --py-files dist/documentconvert_spark.zip \
       jobs/run_curate.py \
       --input <documents parquet/iceberg path> \
@@ -44,23 +44,24 @@ import _bootstrap  # noqa: F401  (self-sufficient launch; see jobs/_bootstrap.py
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    # absent flags stay unset, so run_curation's signature holds every default
+    ap = argparse.ArgumentParser(argument_default=argparse.SUPPRESS)
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--quality-min", type=float, default=0.5)
-    ap.add_argument("--lm-min", type=float, default=None,
+    ap.add_argument("--quality-min", type=float)
+    ap.add_argument("--lm-min", type=float,
                     help="drop docs whose mean unigram log-prob (model "
                          "estimated from the post-dedup corpus itself) is "
                          "below this; off by default")
-    ap.add_argument("--cap-per-source", type=int, default=None,
+    ap.add_argument("--cap-per-source", type=int,
                     help="keep at most N docs per source (C4-style host "
                          "capping, lowest doc_id first); off by default")
-    ap.add_argument("--decontaminate-bench", default=None,
+    ap.add_argument("--decontaminate-bench",
                     help="path to a benchmark documents table; drop docs "
                          "whose Bloom-estimated 8-gram contamination "
                          "exceeds --contamination-max; off by default")
-    ap.add_argument("--contamination-max", type=float, default=0.05)
-    ap.add_argument("--dup-frac-max", type=float, default=None,
+    ap.add_argument("--contamination-max", type=float)
+    ap.add_argument("--dup-frac-max", type=float,
                     help="drop docs whose Lee-style duplicated-substring "
                          "token fraction (8-gram, corpus-wide) exceeds "
                          "this; off by default")
@@ -68,7 +69,7 @@ def main() -> None:
                     help="replace per-language sampling with temperature "
                          "t=0.5 source mixing at --mix-budget-mille of "
                          "the corpus tokens")
-    ap.add_argument("--mix-budget-mille", type=int, default=500)
+    ap.add_argument("--mix-budget-mille", type=int)
     ap.add_argument("--gopher-gate", action="store_true",
                     help="apply the Gopher rule ladder (word count, mean "
                          "word length, symbol/bullet/ellipsis ratios, "
@@ -80,185 +81,18 @@ def main() -> None:
     ap.add_argument("--trim-length-tails", action="store_true",
                     help="drop docs outside their language's nearest-rank "
                          "p05/p95 token-count bounds; off by default")
-    ap.add_argument("--sample-en", type=int, default=200, help="per-mille keep rate for lang=en")
-    ap.add_argument("--sample-other", type=int, default=400, help="per-mille keep rate otherwise")
-    ap.add_argument("--files", type=int, default=64)
-    ap.add_argument("--master", default=None, help="override master (local testing)")
-    args = ap.parse_args()
+    ap.add_argument("--sample-en", type=int, help="per-mille keep rate for lang=en")
+    ap.add_argument("--sample-other", type=int, help="per-mille keep rate otherwise")
+    ap.add_argument("--files", type=int)
+    opts = vars(ap.parse_args())
 
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    # the SAME oracle-verified expressions the driver contract certifies
-    # (documentconvert_spark/functions.py) — the job cannot silently
-    # diverge from the verified curation semantics
-    from documentconvert_spark.functions import SAMPLE_HASH, with_curation_columns
+    from documentconvert_spark.functions import run_curation
     from documentconvert_spark.session import build_session
-    from documentconvert_spark.tableio import read_table, write_sorted
+    from documentconvert_spark.tableio import read_table
 
-    spark = build_session(app_name="curate", master=args.master)
-    docs = read_table(spark, args.input)
-    n_in = docs.count()
-
-    scored = with_curation_columns(docs)
-    w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    # persist the post-dedup slice: three stage counts + the final write
-    # would otherwise re-execute the scan + tokenize + window shuffle
-    deduped = (
-        scored.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).persist()
-    )
-    n_dedup = deduped.count()
-
-    n_decon = None
-    if args.decontaminate_bench:
-        # same oracle-verified definitions as decontaminate_bloom: the
-        # benchmark folds into a constant-size broadcast bitmap; the
-        # contamination side table is (doc_id, 3 numerics)
-        from documentconvert_spark.functions import (
-            bloom_contamination,
-            bloom_filter_words,
-        )
-
-        filt = bloom_filter_words(read_table(spark, args.decontaminate_bench))
-        contaminated = (
-            bloom_contamination(deduped, filt)
-            .filter(F.col("est_contamination") > args.contamination_max)
-            .select("doc_id")
-        )
-        deduped = deduped.join(contaminated, "doc_id", "left_anti")
-        n_decon = deduped.count()
-
-    n_dupfrac = None
-    if args.dup_frac_max is not None:
-        # same oracle-verified definition as dedup_exact_substrings; the
-        # stats side table is (doc_id, 3 numerics), docs without any
-        # duplicated shingle emit no row and always survive
-        from documentconvert_spark.functions import duplicated_substring_stats
-
-        over = (
-            duplicated_substring_stats(deduped)
-            .filter(F.col("dup_frac") > args.dup_frac_max)
-            .select("doc_id")
-        )
-        deduped = deduped.join(over, "doc_id", "left_anti")
-        n_dupfrac = deduped.count()
-
-    n_cap = None
-    if args.cap_per_source is not None:
-        # same oracle-verified definition as cap_per_source
-        from documentconvert_spark.functions import cap_per_source
-
-        deduped = cap_per_source(deduped, args.cap_per_source).drop("rank_in_source")
-        n_cap = deduped.count()
-
-    filtered = deduped.filter(F.col("quality") >= args.quality_min)
-    n_quality = filtered.count()
-
-    n_gopher = None
-    if args.gopher_gate:
-        # same oracle-verified ladder as quality_gopher_gate, applied as
-        # a pure column filter — no join, no shuffle
-        from documentconvert_spark.functions import gopher_fail_reason
-
-        filtered = filtered.filter(gopher_fail_reason().isNull())
-        n_gopher = filtered.count()
-
-    stage_keep_sets = []  # tiny doc_id sets pinned until the final write
-
-    n_lm = None
-    if args.lm_min is not None:
-        # LM stage: unigram model estimated from the post-dedup corpus
-        # (same oracle-verified definition as quality_unigram_logprob).
-        # The doc_id keep-set is materialized WHILE the (doc, term, k)
-        # aggregate is cached, then the big aggregate is freed — only the
-        # tiny keep-set stays pinned for the downstream counts + write
-        from documentconvert_spark.functions import unigram_logprob_table
-
-        lm_tbl, lm_tf = unigram_logprob_table(filtered, return_cache_handle=True)
-        lm_keep = (lm_tbl.filter(F.col("avg_logprob") >= args.lm_min)
-                   .select("doc_id").persist())
-        lm_keep.count()
-        lm_tf.unpersist()
-        stage_keep_sets.append(lm_keep)
-        filtered = filtered.join(lm_keep, "doc_id", "left_semi")
-        n_lm = filtered.count()
-
-    n_ppl = None
-    if args.ppl_drop_tail:
-        # same oracle-verified definition as perplexity_buckets; same
-        # materialize-keep-set-then-free-the-aggregate protocol as --lm-min
-        from documentconvert_spark.functions import perplexity_buckets
-
-        buckets, ppl_tf = perplexity_buckets(filtered, return_cache_handle=True)
-        tail = (buckets.filter(F.col("ppl_bucket") == "tail")
-                .select("doc_id").persist())
-        tail.count()
-        ppl_tf.unpersist()
-        stage_keep_sets.append(tail)
-        filtered = filtered.join(tail, "doc_id", "left_anti")
-        n_ppl = filtered.count()
-
-    n_trim = None
-    if args.trim_length_tails:
-        # bounds from the surviving corpus (same oracle-verified
-        # definition as filter_length_outliers); lang-cardinality side
-        from documentconvert_spark.functions import TOKS, length_outlier_bounds
-
-        bounds = length_outlier_bounds(filtered).select("lang", "lo_tokens", "hi_tokens")
-        filtered = (
-            filtered.withColumn("_nt", F.expr(f"size({TOKS})"))
-            .join(F.broadcast(bounds), "lang")
-            .filter(F.col("_nt").between(F.col("lo_tokens"), F.col("hi_tokens")))
-            .drop("_nt", "lo_tokens", "hi_tokens")
-        )
-        n_trim = filtered.count()
-
-    if args.mix_by_source:
-        # same oracle-verified definition as mix_source_weights: rates
-        # are a |sources|-row broadcast dim; sampling stays narrow
-        from documentconvert_spark.functions import source_mix_rates
-
-        rates = source_mix_rates(filtered, budget_mille=args.mix_budget_mille)
-        # null-safe join: a NULL-source group gets its own rate row and a
-        # plain `= source` join would silently drop those documents
-        r = rates.select(F.col("source").alias("_r_source"), "sample_mille")
-        sampled = (
-            filtered.join(
-                F.broadcast(r), filtered["source"].eqNullSafe(r["_r_source"])
-            )
-            .filter(F.expr(SAMPLE_HASH) < F.col("sample_mille"))
-            .drop("_r_source", "sample_mille")
-        )
-    else:
-        rate = F.when(F.col("lang") == "en", args.sample_en).otherwise(args.sample_other)
-        sampled = filtered.filter(F.expr(SAMPLE_HASH) < rate)
-    n_sampled = sampled.count()
-
-    out = sampled.drop("fingerprint", "_rn")
-    write_sorted(out, args.output, sort_cols=["doc_id"], n_files=args.files)
-    deduped.unpersist()
-    for ks in stage_keep_sets:
-        ks.unpersist()
-
-    print(
-        json.dumps(
-            {
-                "docs_in": n_in,
-                "after_dedup": n_dedup,
-                **({"after_decontamination": n_decon} if n_decon is not None else {}),
-                **({"after_dup_frac": n_dupfrac} if n_dupfrac is not None else {}),
-                **({"after_source_cap": n_cap} if n_cap is not None else {}),
-                "after_quality": n_quality,
-                **({"after_gopher_gate": n_gopher} if n_gopher is not None else {}),
-                **({"after_lm_filter": n_lm} if n_lm is not None else {}),
-                **({"after_ppl_tail_drop": n_ppl} if n_ppl is not None else {}),
-                **({"after_length_trim": n_trim} if n_trim is not None else {}),
-                "after_sampling": n_sampled,
-                "kept_pct": round(100.0 * n_sampled / max(n_in, 1), 2),
-                "output": args.output,
-            }
-        )
-    )
+    spark = build_session(app_name="curate")
+    docs = read_table(spark, opts.pop("input"))
+    print(json.dumps(run_curation(docs, **opts)))
     spark.stop()
 
 

@@ -26,7 +26,7 @@ Output layout (all parquet):
 Submit:
 
     scripts/make_pyfiles.sh
-    spark-submit --master <cluster> \
+    spark-submit <cluster options> \
       --py-files dist/documentconvert_spark.zip \
       jobs/run_index.py --input <embeddings parquet> --output <dir> \
       [--k 8] [--iters 2] [--pq-m 8] [--pq-k 16] [--demo-queries 10]
@@ -47,137 +47,34 @@ import _bootstrap  # noqa: F401  (self-sufficient launch; see jobs/_bootstrap.py
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    # absent flags stay unset, so build_ann_index's signature holds every default
+    ap = argparse.ArgumentParser(argument_default=argparse.SUPPRESS)
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--k", type=int, default=8, help="IVF cells (scale with corpus size)")
-    ap.add_argument("--iters", type=int, default=2, help="Lloyd rounds")
-    ap.add_argument("--pq-m", type=int, default=8, help="PQ subspaces")
-    ap.add_argument("--pq-k", type=int, default=16, help="PQ centroids per subspace (<=16 packs to 4 bits)")
-    ap.add_argument("--demo-queries", type=int, default=0,
+    ap.add_argument("--k", type=int, help="IVF cells (scale with corpus size)")
+    ap.add_argument("--iters", type=int, help="Lloyd rounds")
+    ap.add_argument("--pq-m", type=int, help="PQ subspaces")
+    ap.add_argument("--pq-k", type=int, help="PQ centroids per subspace (<=16 packs to 4 bits)")
+    ap.add_argument("--demo-queries", type=int,
                     help="also run nProbe=2 top-5 search for the N lowest vec_ids")
-    ap.add_argument("--semdedup-tau", type=float, default=None,
+    ap.add_argument("--semdedup-tau", type=float,
                     help="also write a SemDeDup prune table (Abbas 2023): "
                          "drop vectors with a lower-id cluster-mate above "
                          "this cosine similarity; off by default")
-    ap.add_argument("--semdedup-block", type=int, default=256,
+    ap.add_argument("--semdedup-block", type=int,
                     help="target expected cluster size for the SemDeDup "
                          "quantizer: k = max(8, ceil(n/block)), so pair "
                          "work stays LINEAR in the corpus")
-    ap.add_argument("--files", type=int, default=16)
-    ap.add_argument("--master", default=None, help="override master (local testing)")
-    args = ap.parse_args()
-    if args.pq_k > 16:
-        ap.error(f"--pq-k {args.pq_k} cannot pack into 4-bit nibbles (max 16)")
-    if args.pq_m > 15:
-        ap.error(f"--pq-m {args.pq_m} overflows the packed int64 code (max 15)")
+    ap.add_argument("--files", type=int)
+    opts = vars(ap.parse_args())
 
-    from pyspark.sql import functions as F
-
-    from documentconvert_spark.ops.ann import (
-        ivf_assign,
-        ivf_topk,
-        pq_codes,
-        pq_pack,
-        pq_train,
-        train_coarse_kmeans,
-    )
+    from documentconvert_spark.ops.ann import build_ann_index
     from documentconvert_spark.session import build_session
     from documentconvert_spark.tableio import read_table
 
-    spark = build_session(app_name="ann-index", master=args.master)
-    emb_df = read_table(spark, args.input)
-    n_vec = emb_df.count()
-
-    emb, cents = train_coarse_kmeans(emb_df, k=args.k, iters=args.iters)
-    cents.write.mode("overwrite").parquet(f"{args.output}/centroids")
-    n_cells = cents.count()
-
-    assign = ivf_assign(emb, cents)
-    assign.repartition(args.files).write.mode("overwrite").parquet(
-        f"{args.output}/assignments"
-    )
-
-    # dim from the already-built emb frame: one cached-row lookup instead
-    # of letting pq_train trigger its own full-plan inference job
-    dim = len(emb.select("ve").first()["ve"])
-    if dim % args.pq_m:
-        raise SystemExit(f"embedding dim {dim} not divisible by --pq-m {args.pq_m}")
-    _, sub, pq_cents = pq_train(
-        emb_df, m=args.pq_m, ksub=args.pq_k, dsub=dim // args.pq_m, iters=args.iters
-    )
-    pq_cents.write.mode("overwrite").parquet(f"{args.output}/pq_centroids")
-    packed = pq_pack(pq_codes(sub, pq_cents), m=args.pq_m, ksub=args.pq_k)
-    packed.repartition(args.files).write.mode("overwrite").parquet(
-        f"{args.output}/codes"
-    )
-    dist = packed.agg(
-        F.count("*").alias("n"), F.round(F.avg("distortion"), 6).alias("avg_d")
-    ).collect()[0]
-
-    n_sem = sem_cells = None
-    if args.semdedup_tau is not None:
-        # SemDeDup with corpus-scaled k (same oracle-certified definition
-        # as the semdedup_prune contract query, which pins k=8 for the
-        # DuckDB oracle): k grows with n so the expected cluster size —
-        # and with it the within-cluster pair count — stays bounded at
-        # ~--semdedup-block vectors, keeping total pair work linear
-        from documentconvert_spark.ops.ann import (
-            semdedup_plan,
-            semdedup_prune,
-            semdedup_prune_hierarchical,
-        )
-
-        sem_cache = None
-        mode, k_sem = semdedup_plan(n_vec, block=args.semdedup_block)
-        if mode == "two-level":
-            # flat assignment is n*K sims — itself quadratic once K ∝ n.
-            # The two-level quantizer (k12² >= K leaves at n*2*k12
-            # assignment cost) keeps the whole stage O(n^1.5/sqrt(block))
-            prune, sem_cache = semdedup_prune_hierarchical(
-                emb_df, k1=k_sem, k2=k_sem, tau=args.semdedup_tau,
-                iters=args.iters, return_cache_handle=True,
-            )
-            sem_cells = k_sem * k_sem
-        elif k_sem == args.k:
-            prune = semdedup_prune(emb, cents, tau=args.semdedup_tau)
-            sem_cells = k_sem
-        else:
-            sem_emb, sem_cents = train_coarse_kmeans(
-                emb_df, k=k_sem, iters=args.iters
-            )
-            prune = semdedup_prune(sem_emb, sem_cents, tau=args.semdedup_tau)
-            sem_cells = k_sem
-        prune.repartition(args.files).write.mode("overwrite").parquet(
-            f"{args.output}/semdedup_prune"
-        )
-        n_sem = spark.read.parquet(f"{args.output}/semdedup_prune").count()
-        if sem_cache is not None:
-            # release the corpus-sized assignment frame the hierarchical
-            # trainer pins once the prune table is on disk
-            sem_cache.unpersist()
-
-    n_demo = None
-    if args.demo_queries > 0:
-        queries = emb.orderBy("vec_id").limit(args.demo_queries).select("vec_id")
-        topk = ivf_topk(emb, cents, queries, k=5, n_probe=2)
-        topk.write.mode("overwrite").parquet(f"{args.output}/demo_topk")
-        n_demo = topk.count()
-
-    print(
-        json.dumps(
-            {
-                "vectors": n_vec,
-                "ivf_cells": n_cells,
-                "coded_vectors": dist["n"],
-                "avg_distortion": dist["avg_d"],
-                **({"semdedup_cells": sem_cells, "semdedup_pruned": n_sem}
-                   if n_sem is not None else {}),
-                **({"demo_topk_rows": n_demo} if n_demo is not None else {}),
-                "output": args.output,
-            }
-        )
-    )
+    spark = build_session(app_name="ann-index")
+    emb_df = read_table(spark, opts.pop("input"))
+    print(json.dumps(build_ann_index(emb_df, **opts)))
     spark.stop()
 
 

@@ -16,7 +16,7 @@ columns:
 Submit:
 
     scripts/make_pyfiles.sh
-    spark-submit --master <cluster> \
+    spark-submit <cluster options> \
       --py-files dist/documentconvert_spark.zip \
       jobs/run_media.py \
       --input <parquet with doc_id string, content binary> \
@@ -38,122 +38,22 @@ import _bootstrap  # noqa: F401  (self-sufficient launch; see jobs/_bootstrap.py
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    # absent flags stay unset, so curate_media's signature holds every default
+    ap = argparse.ArgumentParser(argument_default=argparse.SUPPRESS)
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--jaccard-num", type=int, default=3)
-    ap.add_argument("--jaccard-den", type=int, default=5)
-    ap.add_argument("--files", type=int, default=16)
-    ap.add_argument("--master", default=None, help="override master (local testing)")
-    args = ap.parse_args()
+    ap.add_argument("--jaccard-num", type=int)
+    ap.add_argument("--jaccard-den", type=int)
+    ap.add_argument("--files", type=int)
+    opts = vars(ap.parse_args())
 
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from documentconvert_spark.kernels.media import sniff_av_meta, sniff_image_meta
-    from documentconvert_spark.ops.multimodal import (
-        audio_fingerprint_table,
-        dhash_hamming_pairs,
-        image_dhash_table,
-        multiset_jaccard_pairs,
-        real_audio_stats,
-        real_video_frame_stats,
-    )
+    from documentconvert_spark.ops.multimodal import curate_media
     from documentconvert_spark.session import build_session
     from documentconvert_spark.tableio import read_table
 
-    spark = build_session(app_name="media", master=args.master)
-    media = read_table(spark, args.input).select("doc_id", "content")
-    n_in = media.count()
-
-    # 1) sniff inventory — header-level only, no decode
-    sniff_schema = T.StructType([
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("format", T.StringType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.IntegerType(), True),
-    ])
-
-    def sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {k: [] for k in ("doc_id", "format", "width", "height", "duration_ms")}
-            for did, blob in zip(b["doc_id"], b["content"]):
-                data = bytes(blob) if blob is not None else b""
-                fmt, w, h, dur = sniff_av_meta(data)
-                if fmt == "unknown":  # not an A/V container: try image
-                    fmt, w, h = sniff_image_meta(data)
-                    dur = None
-                rows["doc_id"].append(did)
-                rows["format"].append(fmt)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["duration_ms"].append(dur)
-            df = pd.DataFrame(rows)
-            for c in ("width", "height", "duration_ms"):
-                df[c] = pd.array(df[c], dtype="Int32")
-            yield df
-
-    inv = media.mapInPandas(sniff, schema=sniff_schema).cache()
-    inv.coalesce(args.files).write.mode("overwrite").parquet(args.output + "/inventory")
-    by_fmt = {r["format"]: r["n"] for r in
-              inv.groupBy("format").agg(F.count("*").alias("n")).collect()}
-
-    # 2) decode stats per modality — route on the sniffed format so the
-    # decoders see only bytes they own; errors stay per-row
-    video_ids = inv.filter(F.col("format").isin("avi", "gif")).select("doc_id")
-    audio_ids = inv.filter(F.col("format").isin("wav", "flac")).select("doc_id")
-    videos = media.join(F.broadcast(video_ids), "doc_id")
-    audios = media.join(F.broadcast(audio_ids), "doc_id")
-
-    vstats = real_video_frame_stats(videos).cache()
-    vstats.coalesce(args.files).write.mode("overwrite").parquet(args.output + "/video_frames")
-    n_frames = vstats.filter(F.col("error").isNull()).count()
-    astats = real_audio_stats(audios).cache()
-    astats.coalesce(args.files).write.mode("overwrite").parquet(args.output + "/audio_stats")
-    n_audio_ok = astats.filter(F.col("error").isNull()).count()
-
-    # 3) near-dup pairs per modality
-    vsig = (vstats.filter(F.col("error").isNull())
-            .select("doc_id",
-                    F.concat_ws(":", "width", "height", "n_dark").alias("sig"),
-                    "frame_idx"))
-    vpairs = multiset_jaccard_pairs(vsig, "sig", "frame_idx",
-                                    args.jaccard_num, args.jaccard_den)
-    apairs = multiset_jaccard_pairs(audio_fingerprint_table(audios),
-                                    "fp", "chunk_idx",
-                                    args.jaccard_num, args.jaccard_den)
-    vpairs.coalesce(1).write.mode("overwrite").parquet(args.output + "/video_pairs")
-    apairs.coalesce(1).write.mode("overwrite").parquet(args.output + "/audio_pairs")
-    n_vpairs = spark.read.parquet(args.output + "/video_pairs").count()
-    n_apairs = spark.read.parquet(args.output + "/audio_pairs").count()
-
-    # 4) image modality: decode + difference hash, banded Hamming pairs
-    image_ids = inv.filter(
-        F.col("format").isin("png", "jpeg", "gif", "bmp", "tiff", "webp")
-    ).select("doc_id")
-    images = media.join(F.broadcast(image_ids), "doc_id")
-    ihash = image_dhash_table(images).cache()
-    ihash.coalesce(args.files).write.mode("overwrite").parquet(args.output + "/image_dhash")
-    n_images = ihash.count()
-    ipairs = dhash_hamming_pairs(ihash)
-    ipairs.coalesce(1).write.mode("overwrite").parquet(args.output + "/image_pairs")
-    n_ipairs = spark.read.parquet(args.output + "/image_pairs").count()
-
-    print(json.dumps({
-        "docs_in": n_in,
-        "by_format": by_fmt,
-        "video_frames_decoded": n_frames,
-        "audio_decoded": n_audio_ok,
-        "images_hashed": n_images,
-        "video_dup_pairs": n_vpairs,
-        "audio_dup_pairs": n_apairs,
-        "image_dup_pairs": n_ipairs,
-        "output": args.output,
-    }))
+    spark = build_session(app_name="media")
+    media = read_table(spark, opts.pop("input"))
+    print(json.dumps(curate_media(media, **opts)))
     spark.stop()
 
 

@@ -23,6 +23,7 @@ import pytest
 
 from documentconvert_spark.callbacks import (
     CallbackLog,
+    deliver_callbacks,
     dispatch_callbacks,
     http_post_transport,
     pending_callbacks,
@@ -89,6 +90,34 @@ def call_dir(tmp_path):
     d = tmp_path / "calls"
     d.mkdir()
     return str(d)
+
+
+@pytest.fixture()
+def http_receiver():
+    """A live localhost HTTP server answering 200 to every POST; yields
+    (url, received) where received collects the POST bodies."""
+    import http.server
+    import threading
+
+    received = []
+
+    class Handler(http.server.BaseHTTPRequestHandler):
+        def do_POST(self):
+            n = int(self.headers.get("Content-Length", 0))
+            received.append(self.rfile.read(n).decode())
+            self.send_response(200)
+            self.end_headers()
+
+        def log_message(self, *a):
+            pass
+
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        yield f"http://127.0.0.1:{srv.server_address[1]}/hook", received
+    finally:
+        srv.shutdown()
+        srv.server_close()
 
 
 def test_dispatch_posts_once_per_terminal_row(spark, tmp_path, call_dir):
@@ -241,40 +270,18 @@ def test_default_transport_shapes_errors_not_raises():
     assert code == -1 and msg
 
 
-def test_end_to_end_with_real_http_server(spark, tmp_path):
+def test_end_to_end_with_real_http_server(spark, tmp_path, http_receiver):
     """Full path through the DEFAULT urllib transport against a live
     localhost HTTP server — the executor-side POST is real."""
-    import http.server
-    import threading
-
-    received = []
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers.get("Content-Length", 0))
-            received.append(self.rfile.read(n).decode())
-            self.send_response(200)
-            self.end_headers()
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    try:
-        store = _state_with_rows(
-            spark, tmp_path, [("d1", "completed", 4), ("d2", "failed", None)]
-        )
-        log = CallbackLog(spark, str(tmp_path / "cblog"))
-        url = f"http://127.0.0.1:{srv.server_address[1]}/hook"
-        dispatch_callbacks(store, log, callback_url=url)  # default transport
-        assert sorted(json.loads(b)["task_id"] for b in received) == ["d1", "d2"]
-        rows = log.read().collect()
-        assert all(r.delivered and r.callback_status_code == 200 for r in rows)
-    finally:
-        srv.shutdown()
-        srv.server_close()
+    url, received = http_receiver
+    store = _state_with_rows(
+        spark, tmp_path, [("d1", "completed", 4), ("d2", "failed", None)]
+    )
+    log = CallbackLog(spark, str(tmp_path / "cblog"))
+    dispatch_callbacks(store, log, callback_url=url)  # default transport
+    assert sorted(json.loads(b)["task_id"] for b in received) == ["d1", "d2"]
+    rows = log.read().collect()
+    assert all(r.delivered and r.callback_status_code == 200 for r in rows)
 
 
 def test_retryable_failure_not_called_back(spark, tmp_path):
@@ -315,52 +322,21 @@ def test_malformed_url_does_not_crash_dispatch(spark, tmp_path, call_dir):
     rows = log.read().collect()
     assert len(rows) == 1 and rows[0].delivered
 
-def test_run_callbacks_cli_redelivers(spark, tmp_path):
-    """Drive the standalone jobs/run_callbacks.py CLI against a state
-    table and a live localhost server: first invocation delivers, second
-    is a no-op (0 delivered, nothing re-POSTed)."""
-    import http.server
-    import subprocess
-    import sys as _sys
-    import threading
-
-    received = []
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers.get("Content-Length", 0))
-            received.append(self.rfile.read(n).decode())
-            self.send_response(200)
-            self.end_headers()
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        _state_with_rows(spark, tmp_path, [("d1", "completed", 2), ("d2", "failed", None)])
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        env = {**os.environ, "PYTHONPATH": repo}
-        url = f"http://127.0.0.1:{srv.server_address[1]}/hook"
-        cmd = [_sys.executable, os.path.join(repo, "jobs", "run_callbacks.py"),
-               "--state", str(tmp_path / "state"), "--callback-url", url,
-               "--master", "local[2]"]
-        p1 = subprocess.run(cmd, capture_output=True, text=True, cwd=repo,
-                            env=env, timeout=300)
-        assert p1.returncode == 0, p1.stderr[-2000:]
-        s1 = json.loads(p1.stdout.strip().splitlines()[-1])
-        assert s1["callbacks_delivered"] == 2 and s1["callbacks_failed"] == 0
-        assert len(received) == 2
-        p2 = subprocess.run(cmd, capture_output=True, text=True, cwd=repo,
-                            env=env, timeout=300)
-        assert p2.returncode == 0, p2.stderr[-2000:]
-        s2 = json.loads(p2.stdout.strip().splitlines()[-1])
-        assert s2["callbacks_delivered"] == 0
-        assert len(received) == 2  # no re-POSTs
-    finally:
-        srv.shutdown()
-        srv.server_close()
+def test_run_callbacks_cli_redelivers(spark, tmp_path, http_receiver):
+    """The run_callbacks job body (deliver_callbacks, default delivery
+    log) against a state table and a live localhost server: first
+    invocation delivers, second is a no-op (0 delivered, nothing
+    re-POSTed)."""
+    url, received = http_receiver
+    store = _state_with_rows(
+        spark, tmp_path, [("d1", "completed", 2), ("d2", "failed", None)]
+    )
+    s1 = deliver_callbacks(store, None, url)
+    assert s1["callbacks_delivered"] == 2 and s1["callbacks_failed"] == 0
+    assert len(received) == 2
+    s2 = deliver_callbacks(store, None, url)
+    assert s2["callbacks_delivered"] == 0
+    assert len(received) == 2  # no re-POSTs
 
 def test_noop_dispatch_appends_no_run_dir_and_log_compacts(spark, tmp_path, call_dir):
     """Repeated no-op redelivery must not grow the log (no empty run
@@ -405,61 +381,34 @@ def test_noop_dispatch_appends_no_run_dir_and_log_compacts(spark, tmp_path, call
     after = {r.doc_id for r in log.delivered_doc_ids().collect()}
     assert after == before == {"d1", "d2", "d3"}
 
-def test_run_extract_cli_inline_callbacks(spark, tmp_path):
-    """The inline --callback-url path on run_extract: first run delivers
-    one callback per terminal doc; an idempotent rerun (resume no-op)
-    reports a null callback run and POSTs nothing new."""
-    import http.server
-    import subprocess
-    import sys as _sys
-    import threading
-
+def test_run_extract_cli_inline_callbacks(spark, tmp_path, http_receiver):
+    """run_extract's rounds then its inline --callback-url delivery, in
+    process: first run delivers one callback per terminal doc; an
+    idempotent rerun (resume no-op) reports a null callback run and POSTs
+    nothing new."""
     from documentconvert_spark.corpus import corpus_rows, fixture_corpus
+    from documentconvert_spark.pipeline import run_extraction_rounds
     from documentconvert_spark.schemas import DOCUMENTS_RAW
 
-    received = []
+    url, received = http_receiver
+    raw = str(tmp_path / "raw")
+    spark.createDataFrame(
+        corpus_rows(fixture_corpus()), schema=DOCUMENTS_RAW
+    ).write.parquet(raw)
 
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def do_POST(self):
-            n = int(self.headers.get("Content-Length", 0))
-            received.append(self.rfile.read(n).decode())
-            self.send_response(200)
-            self.end_headers()
+    def run_job():
+        state = StateStore(spark, str(tmp_path / "state"))
+        run_extraction_rounds(
+            spark, spark.read.parquet(raw), str(tmp_path / "out"), state, rounds=3
+        )
+        return deliver_callbacks(state, None, url)
 
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        raw = str(tmp_path / "raw")
-        spark.createDataFrame(
-            corpus_rows(fixture_corpus()), schema=DOCUMENTS_RAW
-        ).write.parquet(raw)
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        env = {**os.environ, "PYTHONPATH": repo}
-        url = f"http://127.0.0.1:{srv.server_address[1]}/hook"
-        cmd = [_sys.executable, os.path.join(repo, "jobs", "run_extract.py"),
-               "--input", raw, "--output", str(tmp_path / "out"),
-               "--state", str(tmp_path / "state"), "--master", "local[4]",
-               "--rounds", "3", "--callback-url", url]
-        p1 = subprocess.run(cmd, capture_output=True, text=True, cwd=repo,
-                            env=env, timeout=300)
-        assert p1.returncode == 0, p1.stderr[-2000:]
-        cb1 = [json.loads(l) for l in p1.stdout.splitlines()
-               if l.startswith('{"callback')][0]
-        assert cb1["callbacks_delivered"] == len(received) > 0
-        n1 = len(received)
-        p2 = subprocess.run(cmd, capture_output=True, text=True, cwd=repo,
-                            env=env, timeout=300)
-        assert p2.returncode == 0, p2.stderr[-2000:]
-        cb2 = [json.loads(l) for l in p2.stdout.splitlines()
-               if l.startswith('{"callback')][0]
-        assert cb2["callback_run"] is None and cb2["callbacks_delivered"] == 0
-        assert len(received) == n1  # nothing re-POSTed
-    finally:
-        srv.shutdown()
-        srv.server_close()
+    cb1 = run_job()
+    assert cb1["callbacks_delivered"] == len(received) > 0
+    n1 = len(received)
+    cb2 = run_job()
+    assert cb2["callback_run"] is None and cb2["callbacks_delivered"] == 0
+    assert len(received) == n1  # nothing re-POSTed
 
 
 def test_host_shards_split_skewed_host_layout_and_semantics(spark, tmp_path, call_dir):

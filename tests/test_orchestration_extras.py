@@ -4,13 +4,16 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from documentconvert_spark.corpus import corpus_rows, generate_corpus
 from documentconvert_spark.ops.skew import salted_agg, salted_distinct_count
-from documentconvert_spark.pipeline import run_extraction_job
+from documentconvert_spark.pipeline import run_extraction_job, run_extraction_rounds
 from documentconvert_spark.schemas import DOCUMENTS_RAW
 from documentconvert_spark.state import StateStore
+
+SF = "/root/testdata/sf0.001"
 
 
 def test_state_compaction(spark, tmp_path):
@@ -112,36 +115,26 @@ def test_p5_result_file_filter(spark):
     assert got == {n: e for n, e in names}
 
 
-def test_run_curate_cli_end_to_end(tmp_path):
-    """jobs/run_curate.py is a product surface with its own wiring (stage
-    counts, persist, sorted write) — drive the literal CLI in a fresh
-    interpreter against a small documents table and check the printed
-    stage funnel plus the written output."""
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_run_curate_cli_end_to_end(spark, tmp_path):
+    """The run_curate job body (functions.run_curation: stage counts,
+    persist, sorted write) against a small documents table: check the
+    returned stage funnel plus the written output."""
     import pyarrow.parquet as pq
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    from documentconvert_spark.functions import run_curation
+    from documentconvert_spark.tableio import read_table
+
     src = "/root/testdata/sf0.001/documents.parquet"
     out = str(tmp_path / "curated")
-    env = {**os.environ, "PYTHONPATH": repo}
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "run_curate.py"),
-         "--input", src, "--output", out,
-         "--quality-min", "0.3", "--sample-en", "500", "--sample-other", "500",
-         "--lm-min", "-100", "--cap-per-source", "10", "--trim-length-tails",
-         "--files", "4", "--master", "local[4]"],
-        capture_output=True, text=True, cwd=repo, env=env, timeout=300,
+    summary = run_curation(
+        read_table(spark, src), out,
+        quality_min=0.3, sample_en=500, sample_other=500,
+        lm_min=-100, cap_per_source=10, trim_length_tails=True, files=4,
     )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    summary = json.loads(proc.stdout.strip().splitlines()[-1])
     # funnel must be monotone and the write must match the final count;
     # -100 is permissively below any real mean log-prob, so the LM stage
     # must pass everything through (its wiring, not its threshold, is
-    # what the CLI run checks — threshold behavior is unit-tested)
+    # what the job run checks — threshold behavior is unit-tested)
     assert (summary["docs_in"] >= summary["after_dedup"]
             >= summary["after_source_cap"] >= summary["after_quality"]
             >= summary["after_length_trim"] >= summary["after_sampling"] > 0)
@@ -157,37 +150,29 @@ def test_run_curate_cli_end_to_end(tmp_path):
     assert "fingerprint" not in written.schema.names  # internals dropped
 
 
-def test_run_curate_cli_decontaminates_and_mixes(tmp_path):
-    """Drive run_curate's --decontaminate-bench and --mix-by-source
-    stages end-to-end: a benchmark built from the first documents must
-    knock those documents (contamination 1.0) out of the corpus, and
-    source mixing must still produce a non-empty sorted write."""
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_run_curate_cli_decontaminates_and_mixes(spark, tmp_path):
+    """run_curation's decontaminate_bench and mix_by_source stages end to
+    end: a benchmark built from the first documents must knock those
+    documents (contamination 1.0) out of the corpus, and source mixing
+    must still produce a non-empty sorted write."""
     import pyarrow.parquet as pq
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    from documentconvert_spark.functions import run_curation
+    from documentconvert_spark.tableio import read_table
+
     src = "/root/testdata/sf0.001/documents.parquet"
     bench = str(tmp_path / "bench.parquet")
     docs = pq.read_table(src)
     pq.write_table(docs.slice(0, 10), bench)
     out = str(tmp_path / "curated")
-    env = {**os.environ, "PYTHONPATH": repo}
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "run_curate.py"),
-         "--input", src, "--output", out,
-         "--quality-min", "0.0",
-         "--decontaminate-bench", bench, "--contamination-max", "0.3",
-         "--dup-frac-max", "0.9",
-         "--mix-by-source", "--mix-budget-mille", "500",
-         "--files", "2", "--master", "local[4]"],
-        capture_output=True, text=True, cwd=repo, env=env, timeout=300,
+    summary = run_curation(
+        read_table(spark, src), out,
+        quality_min=0.0,
+        decontaminate_bench=bench, contamination_max=0.3,
+        dup_frac_max=0.9,
+        mix_by_source=True, mix_budget_mille=500,
+        files=2,
     )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    summary = json.loads(proc.stdout.strip().splitlines()[-1])
     # the bench docs are IN the corpus: their self-contamination is 1.0,
     # far over the 0.3 ceiling, so decontamination must drop rows; the
     # dup-frac stage slots into the funnel between it and quality
@@ -200,30 +185,24 @@ def test_run_curate_cli_decontaminates_and_mixes(tmp_path):
     assert "sample_mille" not in written.schema.names  # mixing internals dropped
 
 
-def test_run_index_cli_builds_ann_index(tmp_path):
-    """Drive the literal jobs/run_index.py CLI: the persisted index must
-    cover every vector (assignments and codes), the coarse cells must be
-    non-degenerate, and the demo search must return top-5 rows per
-    query."""
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_run_index_cli_builds_ann_index(spark, tmp_path):
+    """The run_index job body (ops.ann.build_ann_index): the persisted
+    index must cover every vector (assignments and codes), the coarse
+    cells must be non-degenerate, and the demo search must return top-5
+    rows per query. Out-of-range PQ shapes are refused up front."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    from documentconvert_spark.ops.ann import build_ann_index
+    from documentconvert_spark.tableio import read_table
+
     out = str(tmp_path / "index")
-    env = {**os.environ, "PYTHONPATH": repo}
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "run_index.py"),
-         "--input", "/root/testdata/sf0.001/embeddings.parquet",
-         "--output", out, "--k", "8", "--demo-queries", "10",
-         "--files", "2", "--master", "local[4]"],
-        capture_output=True, text=True, cwd=repo, env=env, timeout=300,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    summary = json.loads(proc.stdout.strip().splitlines()[-1])
+    emb_df = read_table(spark, f"{SF}/embeddings.parquet")
+    with pytest.raises(ValueError, match="--pq-k 17 cannot pack"):
+        build_ann_index(emb_df, out, pq_k=17)
+    with pytest.raises(ValueError, match="--pq-m 16 overflows"):
+        build_ann_index(emb_df, out, pq_m=16)
+    summary = build_ann_index(emb_df, out, k=8, demo_queries=10, files=2)
     assert summary["vectors"] == 500
     assert 1 < summary["ivf_cells"] <= 8          # empty cells may drop out
     assert summary["coded_vectors"] == 500        # every vector coded
@@ -233,39 +212,28 @@ def test_run_index_cli_builds_ann_index(tmp_path):
     assert assigns.num_rows == 500
     codes = pq.read_table(out + "/codes")
     # 4-bit nibbles x 8 subspaces fit one positive int32 range
-    import pyarrow.compute as pc
     assert pc.max(codes["packed_code"]).as_py() < 1 << 32
     assert pc.min(codes["packed_code"]).as_py() >= 0
 
 
-def test_run_index_cli_semdedup_scaled_k(tmp_path):
-    """Drive jobs/run_index.py --semdedup-tau: the prune table must be
-    written with corpus-scaled k (500 vectors / block 32 -> 16 cells,
-    NOT the index's fixed --k 8), every pruned vector must point at a
-    lower-id keeper, and no vector may be pruned twice — the production
-    path the k=8 contract query certifies the semantics of."""
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_run_index_cli_semdedup_scaled_k(spark, tmp_path):
+    """build_ann_index with semdedup_tau: the prune table must be written
+    with corpus-scaled k (500 vectors / block 32 -> 16 cells, NOT the
+    index's fixed k=8), every pruned vector must point at a lower-id
+    keeper, and no vector may be pruned twice — the production path the
+    k=8 contract query certifies the semantics of."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    from documentconvert_spark.ops.ann import build_ann_index
+    from documentconvert_spark.tableio import read_table
+
     out = str(tmp_path / "index")
-    env = {**os.environ, "PYTHONPATH": repo}
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "run_index.py"),
-         "--input", "/root/testdata/sf0.001/embeddings.parquet",
-         "--output", out, "--k", "8",
-         "--semdedup-tau", "0.4", "--semdedup-block", "32",
-         "--files", "2", "--master", "local[4]"],
-        capture_output=True, text=True, cwd=repo, env=env, timeout=300,
+    summary = build_ann_index(
+        read_table(spark, f"{SF}/embeddings.parquet"), out,
+        k=8, semdedup_tau=0.4, semdedup_block=32, files=2,
     )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    summary = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert summary["semdedup_cells"] == 16      # ceil(500/32), not --k
+    assert summary["semdedup_cells"] == 16      # ceil(500/32), not k
     assert summary["semdedup_pruned"] > 0
     prune = pq.read_table(out + "/semdedup_prune")
     assert prune.num_rows == summary["semdedup_pruned"]
@@ -277,69 +245,95 @@ def test_run_index_cli_semdedup_scaled_k(tmp_path):
 
 
 def test_run_extract_cli_compacts_state(spark, tmp_path):
-    """Drive the literal jobs/run_extract.py CLI with --compact-state: the
-    retry rounds leave multiple state run directories (poison docs fail
-    and re-append); the flag must collapse them into ONE committed
-    snapshot, and a rerun of the same command must resume to 'nothing
-    left' — the scale guard for latest() reconstruction, which reads
-    every run directory (state.py)."""
-    import json
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    """run_extract's retry rounds then --compact-state, in process: the
+    rounds leave multiple state run directories (poison docs fail and
+    re-append); compaction must collapse them into ONE committed
+    snapshot, and a rerun must resume to 'nothing left' — the scale guard
+    for latest() reconstruction, which reads every run directory
+    (state.py)."""
     docs = spark.createDataFrame(
         corpus_rows(generate_corpus(30, big_every=0)), schema=DOCUMENTS_RAW
     )
     src = str(tmp_path / "docs")
     docs.write.parquet(src)
     out, state = str(tmp_path / "out"), str(tmp_path / "state")
-    env = {**os.environ, "PYTHONPATH": repo}
-    cmd = [sys.executable, os.path.join(repo, "jobs", "run_extract.py"),
-           "--input", src, "--output", out, "--state", state,
-           "--partitions", "4", "--rounds", "3", "--master", "local[4]",
-           "--compact-state"]
-    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=repo,
-                          env=env, timeout=300)
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    lines = [json.loads(ln) for ln in proc.stdout.strip().splitlines()
-             if ln.startswith("{")]
-    rounds = [ln for ln in lines if "round" in ln]
-    assert rounds and rounds[0]["processed"] == 30
-    compacted = [ln for ln in lines if "compacted_runs" in ln]
-    assert compacted and compacted[0]["compacted_runs"] == len(rounds)
-    assert compacted[0]["runs_after"] == 1
+
+    def run_job():
+        st = StateStore(spark, state)
+        return st, run_extraction_rounds(
+            spark, spark.read.parquet(src), out, st, rounds=3, target_partitions=4
+        )
+
+    st, rounds = run_job()
+    assert rounds and rounds[0].processed == 30
+    compacted_runs = len(st._committed_run_dirs())
+    st.compact()
+    assert compacted_runs == len(rounds)
+    assert len(st._committed_run_dirs()) == 1
     dirs = [e for e in os.listdir(state) if e.startswith("run_id=")]
     assert len(dirs) == 1
 
     # resume on the compacted snapshot: nothing left (poison docs are
     # terminal-failed at the attempt cap, completed docs stay completed)
-    proc2 = subprocess.run(cmd, capture_output=True, text=True, cwd=repo,
-                           env=env, timeout=300)
-    assert proc2.returncode == 0, proc2.stderr[-2000:]
-    rounds2 = [json.loads(ln) for ln in proc2.stdout.strip().splitlines()
-               if ln.startswith("{") and "round" in ln]
-    assert rounds2[0]["processed"] == 0
+    _, rounds2 = run_job()
+    assert rounds2[0].processed == 0
 
 
-def test_run_media_cli_end_to_end(tmp_path):
-    """jobs/run_media.py is the multimodal job surface (sniff inventory →
-    per-modality decode stats → near-dup pairs) — drive the literal CLI
-    in a fresh interpreter against a mixed media table with planted dups
-    and a corrupt blob, then check the summary funnel and the outputs."""
-    import json
-    import os
-    import subprocess
+def test_run_extraction_rounds_backoff_and_stopping(spark, tmp_path, monkeypatch):
+    """The retry-round loop: failing rounds back off 1 s then 2 s (no
+    sleep after the last round), a clean corpus stops after one round,
+    and bounded batches drain the corpus until a batch comes up short."""
+    import time
+    from types import SimpleNamespace
+
+    from documentconvert_spark import pipeline
+
+    sleeps = []
+    monkeypatch.setattr(
+        pipeline, "time", SimpleNamespace(monotonic=time.monotonic, sleep=sleeps.append)
+    )
+
+    def rounds_over(name, docs_list, **kw):
+        docs = spark.createDataFrame(corpus_rows(docs_list), schema=DOCUMENTS_RAW)
+        st = StateStore(spark, str(tmp_path / name / "state"))
+        res = run_extraction_rounds(
+            spark, docs, str(tmp_path / name / "out"), st, target_partitions=4, **kw
+        )
+        return st, res
+
+    poisoned = generate_corpus(30, big_every=0)
+    assert any(d.expect_error for d in poisoned)
+    _, res = rounds_over("poison", poisoned, rounds=3)
+    assert len(res) == 3 and all(r.failed for r in res)
+    assert sleeps == [1.0, 2.0]
+
+    clean = [d for d in generate_corpus(40, big_every=0) if not d.expect_error][:30]
+    sleeps.clear()
+    _, res = rounds_over("clean", clean, rounds=3)
+    assert [(r.processed, r.failed) for r in res] == [(30, 0)]
+
+    st, res = rounds_over("batched", clean, rounds=10, max_docs=10)
+    assert [r.processed for r in res] == [10, 10, 10, 0]
+    assert st.latest().filter(F.col("status") == "completed").count() == 30
+    assert sleeps == []
+
+
+def test_run_media_cli_end_to_end(spark, tmp_path):
+    """The run_media job body (ops.multimodal.curate_media: sniff
+    inventory → per-modality decode stats → near-dup pairs) against a
+    mixed media table with planted dups and a corrupt blob: check the
+    summary funnel and the outputs."""
     import sys
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, repo)
     from documentconvert_spark.corpus import encode_flac, render_avi
+    from documentconvert_spark.ops.multimodal import curate_media
     from documentconvert_spark.queries_extraction import _wav_pcm_bytes
+    from documentconvert_spark.tableio import read_table
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     grids = [[bytearray([255] * 20) for _ in range(10)] for _ in range(4)]
     for f, g in enumerate(grids):
         for y in range(2, 4 + f):
@@ -371,15 +365,7 @@ def test_run_media_cli_end_to_end(tmp_path):
     pq.write_table(pa.table({"doc_id": [r[0] for r in rows],
                              "content": [r[1] for r in rows]}), src)
     out = str(tmp_path / "media_out")
-    env = {**os.environ, "PYTHONPATH": repo}
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "run_media.py"),
-         "--input", src, "--output", out, "--files", "2",
-         "--master", "local[4]"],
-        capture_output=True, text=True, cwd=repo, env=env, timeout=300,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    summary = json.loads(proc.stdout.strip().splitlines()[-1])
+    summary = curate_media(read_table(spark, src), out, files=2)
     assert summary["docs_in"] == 8
     assert summary["by_format"] == {"avi": 2, "wav": 1, "flac": 1, "gif": 1,
                                     "png": 1, "webp": 1, "unknown": 1}
@@ -396,32 +382,23 @@ def test_run_media_cli_end_to_end(tmp_path):
     assert vp[0]["matches"] == 4  # exact cross-codec frame match
 
 
-def test_run_curate_cli_gopher_gate_and_ppl_tail(tmp_path):
-    """Drive run_curate's --gopher-gate and --ppl-drop-tail stages
-    end-to-end: the Gopher ladder must drop the sub-50-word docs, the
-    CCNet tail drop must remove roughly the per-language bottom tertile,
-    and the funnel stays monotone into a non-empty sorted write."""
-    import json
-    import os
-    import subprocess
-    import sys
-
+def test_run_curate_cli_gopher_gate_and_ppl_tail(spark, tmp_path):
+    """run_curation's gopher_gate and ppl_drop_tail stages end to end:
+    the Gopher ladder must drop the sub-50-word docs, the CCNet tail drop
+    must remove roughly the per-language bottom tertile, and the funnel
+    stays monotone into a non-empty sorted write."""
     import pyarrow.parquet as pq
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    from documentconvert_spark.functions import run_curation
+    from documentconvert_spark.tableio import read_table
+
     src = "/root/testdata/sf0.001/documents.parquet"
     out = str(tmp_path / "curated")
-    env = {**os.environ, "PYTHONPATH": repo}
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "run_curate.py"),
-         "--input", src, "--output", out,
-         "--quality-min", "0.0", "--sample-en", "1000", "--sample-other", "1000",
-         "--gopher-gate", "--ppl-drop-tail",
-         "--files", "2", "--master", "local[4]"],
-        capture_output=True, text=True, cwd=repo, env=env, timeout=300,
+    summary = run_curation(
+        read_table(spark, src), out,
+        quality_min=0.0, sample_en=1000, sample_other=1000,
+        gopher_gate=True, ppl_drop_tail=True, files=2,
     )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    summary = json.loads(proc.stdout.strip().splitlines()[-1])
     assert (summary["docs_in"] >= summary["after_dedup"]
             >= summary["after_quality"] > summary["after_gopher_gate"]
             > summary["after_ppl_tail_drop"] >= summary["after_sampling"] > 0)
@@ -434,32 +411,66 @@ def test_run_curate_cli_gopher_gate_and_ppl_tail(tmp_path):
     assert written.num_rows == summary["after_sampling"]
 
 
-def test_jobs_self_sufficient_without_pythonpath(spark, tmp_path):
-    """Operator ergonomics (r4 verdict ask #8): `python jobs/run_X.py`
-    must work from ANY cwd with NO PYTHONPATH export — the jobs
-    bootstrap the repo root onto sys.path for the driver and into the
-    PYTHONPATH env for the executor Python workers (which import the
-    package's module-level UDFs; a driver-side sys.path alone does not
-    reach them). run_extract is the strongest probe: its extraction UDF
-    executes package imports inside every executor worker."""
+def _smoke_media(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from documentconvert_spark.corpus import encode_gray_png
+
+    src = str(tmp_path / "media.parquet")
+    img = [bytearray(min(255, 30 + 3 * x + y) for x in range(48)) for y in range(24)]
+    pq.write_table(pa.table({"doc_id": ["m-png", "m-bad"],
+                             "content": [encode_gray_png(48, 24, img), b"junk"]}), src)
+    return ["--input", src, "--output", str(tmp_path / "out"), "--files", "1"]
+
+
+def _smoke_extract(spark, tmp_path):
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(
+        corpus_rows(generate_corpus(20, big_every=0)), schema=DOCUMENTS_RAW
+    ).write.parquet(src)
+    return ["--input", src, "--output", str(tmp_path / "out"),
+            "--state", str(tmp_path / "state"), "--rounds", "1", "--compact-state"]
+
+
+_SMOKE = {
+    "run_extract": (_smoke_extract, "runs_after"),
+    "run_curate": (lambda spark, tmp_path: [
+        "--input", f"{SF}/documents.parquet",
+        "--output", str(tmp_path / "out"), "--files", "1"], "after_sampling"),
+    "run_index": (lambda spark, tmp_path: [
+        "--input", f"{SF}/embeddings.parquet",
+        "--output", str(tmp_path / "out"), "--files", "1"], "avg_distortion"),
+    "run_media": (_smoke_media, "by_format"),
+    # an empty state table: the job starts, parses and reports, no POSTs
+    "run_callbacks": (lambda spark, tmp_path: [
+        "--state", str(tmp_path / "state"),
+        "--callback-url", "http://127.0.0.1:9/hook"], "callbacks_delivered"),
+}
+
+
+@pytest.mark.parametrize("job", sorted(_SMOKE))
+def test_jobs_self_sufficient_without_pythonpath(spark, tmp_path, job):
+    """Operator ergonomics: `python jobs/run_X.py` must work from ANY cwd
+    with NO PYTHONPATH export — the jobs bootstrap the repo root onto
+    sys.path for the driver and into the PYTHONPATH env for the executor
+    Python workers (which import the package's module-level UDFs; a
+    driver-side sys.path alone does not reach them). One fresh-JVM smoke
+    run per job on a tiny input; the job bodies themselves are tested in
+    process above."""
     import json
     import subprocess
     import sys
 
+    make_args, key = _SMOKE[job]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    docs = spark.createDataFrame(
-        corpus_rows(generate_corpus(20, big_every=0)), schema=DOCUMENTS_RAW
-    )
-    src = str(tmp_path / "docs")
-    docs.write.parquet(src)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_MASTER"] = "local[2]"
     proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "jobs", "run_extract.py"),
-         "--input", src, "--output", str(tmp_path / "out"),
-         "--state", str(tmp_path / "state"),
-         "--rounds", "1", "--master", "local[4]"],
+        [sys.executable, os.path.join(repo, "jobs", f"{job}.py"),
+         *make_args(spark, tmp_path)],
         capture_output=True, text=True, cwd=str(tmp_path), env=env, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert summary["docs_in"] == 20
+    assert key in summary
