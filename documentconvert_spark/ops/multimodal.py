@@ -489,14 +489,21 @@ def audio_fingerprint_table(audios: DataFrame, chunk: int = 250) -> DataFrame:
 
 
 def multiset_jaccard_pairs(sig: DataFrame, key_col: str, order_col: str,
-                           num: int, den: int) -> DataFrame:
+                           num: int, den: int, return_cache_handle: bool = False):
     """Per-item keys → near-dup pairs (doc_a, doc_b, matches, n_a, n_b)
     whose multiset Jaccard clears num/den, decided by integer
     cross-multiplication (no float in any hashed output). Multiset
     semantics via an occurrence index over `order_col`, so repeated
-    identical items match one-to-one. The keyed table is cached: it is
-    referenced three times (counts + both join sides) and holds only
-    small keys, while the upstream decode is the expensive part."""
+    identical items match one-to-one.
+
+    The keyed table is referenced three times (counts + both join sides)
+    and holds only small keys, while the upstream decode is the expensive
+    part, so it is worth caching — but only when the caller takes the
+    handle: with return_cache_handle=True returns (pairs_df, keyed), and
+    the caller MUST unpersist `keyed` after materializing the pairs (same
+    protocol as ops.ann.semdedup_prune_hierarchical). Without the handle
+    nothing is cached, so stateless callers (the contract queries) leave
+    no cache behind."""
     from pyspark.sql.window import Window
 
     s = sig.select("doc_id", F.col(key_col).alias("k"),
@@ -504,10 +511,12 @@ def multiset_jaccard_pairs(sig: DataFrame, key_col: str, order_col: str,
     s = s.withColumn(
         "occ",
         F.row_number().over(Window.partitionBy("doc_id", "k").orderBy("o")),
-    ).cache()
+    )
+    if return_cache_handle:
+        s = s.cache()
     counts = s.groupBy("doc_id").agg(F.count("*").alias("n"))
     a, b = s.alias("a"), s.alias("b")
-    return (
+    pairs = (
         a.join(b, (F.col("a.k") == F.col("b.k"))
                & (F.col("a.occ") == F.col("b.occ"))
                & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -525,6 +534,7 @@ def multiset_jaccard_pairs(sig: DataFrame, key_col: str, order_col: str,
                 F.col("n_a").cast("long").alias("n_a"),
                 F.col("n_b").cast("long").alias("n_b"))
     )
+    return (pairs, s) if return_cache_handle else pairs
 
 
 def image_dhash_table(images: DataFrame) -> DataFrame:
@@ -723,9 +733,11 @@ def curate_media(media: DataFrame, output: str, *, jaccard_num: int = 3,
             .select("doc_id",
                     F.concat_ws(":", "width", "height", "n_dark").alias("sig"),
                     "frame_idx"))
-    vpairs = multiset_jaccard_pairs(vsig, "sig", "frame_idx", jaccard_num, jaccard_den)
-    apairs = multiset_jaccard_pairs(audio_fingerprint_table(audios),
-                                    "fp", "chunk_idx", jaccard_num, jaccard_den)
+    vpairs, vkeys = multiset_jaccard_pairs(vsig, "sig", "frame_idx", jaccard_num,
+                                           jaccard_den, return_cache_handle=True)
+    apairs, akeys = multiset_jaccard_pairs(audio_fingerprint_table(audios),
+                                           "fp", "chunk_idx", jaccard_num, jaccard_den,
+                                           return_cache_handle=True)
     vpairs.coalesce(1).write.mode("overwrite").parquet(output + "/video_pairs")
     apairs.coalesce(1).write.mode("overwrite").parquet(output + "/audio_pairs")
     n_vpairs = spark.read.parquet(output + "/video_pairs").count()
@@ -742,7 +754,7 @@ def curate_media(media: DataFrame, output: str, *, jaccard_num: int = 3,
     ipairs = dhash_hamming_pairs(ihash)
     ipairs.coalesce(1).write.mode("overwrite").parquet(output + "/image_pairs")
     n_ipairs = spark.read.parquet(output + "/image_pairs").count()
-    for cached in (inv, vstats, astats, ihash):
+    for cached in (inv, vstats, astats, ihash, vkeys, akeys):
         cached.unpersist()  # the session may outlive this pass
 
     return {

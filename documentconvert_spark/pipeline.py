@@ -4,7 +4,7 @@ The reference's whole REST→queue→download→convert→upload→update lifecy
 collapses to one declarative DAG:
 
     docs ──left_anti(state.completed ∪ state.terminal_failed)──▶ todo
-    todo ──size-aware split (heavy tail isolated)──▶ extract UDF
+    todo ──size-aware split (heavy tail isolated)──▶ encoding-repair + extract UDFs
          ──▶ spans + markdown + error columns
          ──▶ spans_out parquet  +  state append (per-doc row, per-partition metrics)
 
@@ -20,6 +20,11 @@ Scale design (north_rule mandates, SURVEY.md §4):
   path; extraction, markdown fold, and state-row derivation are narrow.
   Work-selection anti-joins run against the state table; completed/terminal
   id sets are doc_id-only projections and AQE picks broadcast vs SMJ.
+- **One Python stage.** The source_path repair and the extraction UDF run
+  after the split in one projection, so Spark evaluates both in a single
+  ArrowEvalPython node. Every task of a pandas-UDF node pays Python
+  worker set-up, and a repair stage before the split's shuffle would add
+  a second stage and a barrier.
 - **Arrow batches.** maxRecordsPerBatch capped in session.py bounds
   Python-side memory per batch of large documents.
 - **Containment.** A malformed document becomes an error row (C7), so one
@@ -264,6 +269,8 @@ def run_extraction_job(
     write output + append state. Rerunning after any interruption converges
     to all-done with no duplicate processing (idempotent per doc_id);
     failed docs are retried until MAX_ATTEMPTS then parked as the DLQ slice.
+    ``priority_expr`` sees the input columns as given (source_path before
+    its encoding repair, which runs after work selection).
     """
     t0 = time.monotonic()
     target_partitions = target_partitions or spark.sparkContext.defaultParallelism
@@ -275,7 +282,6 @@ def run_extraction_job(
     stats = corpus_stats(docs)
     docs_in = stats.n
 
-    docs = prepare_documents(docs)
     # Work selection runs on a SLIM doc_id projection, never on the fat
     # frame: an anti-join planned as sort-merge shuffles its whole left
     # side, and letting `content` ride that shuffle is the single most
@@ -315,8 +321,12 @@ def run_extraction_job(
         # small-corpus rescue would shuffle it a second time for nothing
         small_corpus_bytes=-1.0 if max_docs is not None else None,
     )
+    # repair per slice, not on the raw input: both UDFs then share one
+    # ArrowEvalPython node (see "One Python stage" above)
     extracted = [
-        extract_spans(part, passthrough=("source_bucket", "source_path", "attempt"))
+        extract_spans(
+            prepare_documents(part), passthrough=("source_bucket", "source_path", "attempt")
+        )
         for part in (light, heavy)
     ]
     out = extracted[0].unionByName(extracted[1])

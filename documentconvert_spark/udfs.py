@@ -12,6 +12,10 @@ input_hint mandate):
      batches still make one JVM↔Python round trip.
   2. fix_encoding_udf(s) -> string — URL-decode + mojibake repair chain.
 
+The extraction job applies both to the same post-split projection, so
+Spark evaluates them in ONE ArrowEvalPython node: one Python stage per
+job, whose tasks each pay the pandas-UDF worker set-up once.
+
 Per-row error containment (reference C7, `document_service.py:119-126`):
 a malformed document yields an error row, never a failed Spark task.
 """

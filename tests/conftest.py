@@ -15,3 +15,17 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def df_cache_rdd_ids(spark):
+    """Returns a callable giving the ids of persisted RDDs that back cached
+    DataFrames. The DataFrame cache names its RDD after the plan;
+    localCheckpoint RDDs (the ANN quantizer's per-round leaves) are
+    unnamed and reclaimed by the context cleaner, so they are not a leak."""
+
+    def ids():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in rdds.keySet().toArray() if rdds[k].name() is not None}
+
+    return ids

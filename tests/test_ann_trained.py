@@ -148,16 +148,7 @@ def test_semdedup_plan_work_model_subquadratic():
     assert mode == "two-level"
 
 
-def _df_cache_rdd_ids(spark):
-    """Ids of persisted RDDs that back cached DataFrames. The DataFrame
-    cache names its RDD after the plan; localCheckpoint RDDs (the
-    quantizer's per-round leaves) are unnamed and reclaimed by the
-    context cleaner, so they are not a leak."""
-    rdds = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in rdds.keySet().toArray() if rdds[k].name() is not None}
-
-
-def test_semdedup_hierarchical_without_handle_leaves_no_cache(spark):
+def test_semdedup_hierarchical_without_handle_leaves_no_cache(spark, df_cache_rdd_ids):
     """A caller that takes no cache handle cannot unpersist, so the
     hierarchical prune must persist nothing for it: after a default call
     and collect() no DataFrame-cache RDD remains. With the handle the
@@ -169,15 +160,15 @@ def test_semdedup_hierarchical_without_handle_leaves_no_cache(spark):
     rng = np.random.default_rng(3)
     rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(120)]
     emb_df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    before = _df_cache_rdd_ids(spark)
+    before = df_cache_rdd_ids()
 
     semdedup_prune_hierarchical(emb_df, k1=3, k2=3, tau=0.9).collect()
-    assert _df_cache_rdd_ids(spark) - before == set()
+    assert df_cache_rdd_ids() - before == set()
 
     prune, vecs = semdedup_prune_hierarchical(
         emb_df, k1=3, k2=3, tau=0.9, return_cache_handle=True
     )
     prune.collect()
-    assert _df_cache_rdd_ids(spark) - before != set()
+    assert df_cache_rdd_ids() - before != set()
     vecs.unpersist(blocking=True)
-    assert _df_cache_rdd_ids(spark) - before == set()
+    assert df_cache_rdd_ids() - before == set()

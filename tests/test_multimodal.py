@@ -288,3 +288,29 @@ def test_ogg_granule_comes_from_page_walk_not_payload_rfind():
     fmt, _w, _h, dur = sniff_av_meta(page1 + page2)
     assert fmt == "ogg"
     assert dur == 2000  # 16000 granules at 8 kHz, not 125,000,000 ms
+
+
+def test_multiset_jaccard_without_handle_leaves_no_cache(spark, df_cache_rdd_ids):
+    """A caller that takes no cache handle cannot unpersist, so the
+    near-dup pairing must persist nothing for it: after a default call
+    and collect() no DataFrame-cache RDD remains. With the handle the
+    keyed table is cached until the caller unpersists it."""
+    from documentconvert_spark.ops.multimodal import multiset_jaccard_pairs
+
+    sig = spark.createDataFrame(
+        [("a", "x", 0), ("a", "y", 1), ("b", "x", 0), ("b", "y", 1), ("c", "z", 0)],
+        "doc_id string, sig string, frame_idx int",
+    )
+    before = df_cache_rdd_ids()
+
+    pairs = multiset_jaccard_pairs(sig, "sig", "frame_idx", 3, 5).collect()
+    assert [(r.doc_a, r.doc_b, r.matches) for r in pairs] == [("a", "b", 2)]
+    assert df_cache_rdd_ids() - before == set()
+
+    pairs, keyed = multiset_jaccard_pairs(
+        sig, "sig", "frame_idx", 3, 5, return_cache_handle=True
+    )
+    pairs.collect()
+    assert df_cache_rdd_ids() - before != set()
+    keyed.unpersist(blocking=True)
+    assert df_cache_rdd_ids() - before == set()

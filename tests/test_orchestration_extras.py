@@ -318,7 +318,7 @@ def test_run_extraction_rounds_backoff_and_stopping(spark, tmp_path, monkeypatch
     assert sleeps == []
 
 
-def test_run_media_cli_end_to_end(spark, tmp_path):
+def test_run_media_cli_end_to_end(spark, tmp_path, df_cache_rdd_ids):
     """The run_media job body (ops.multimodal.curate_media: sniff
     inventory → per-modality decode stats → near-dup pairs) against a
     mixed media table with planted dups and a corrupt blob: check the
@@ -365,7 +365,9 @@ def test_run_media_cli_end_to_end(spark, tmp_path):
     pq.write_table(pa.table({"doc_id": [r[0] for r in rows],
                              "content": [r[1] for r in rows]}), src)
     out = str(tmp_path / "media_out")
+    before = df_cache_rdd_ids()
     summary = curate_media(read_table(spark, src), out, files=2)
+    assert df_cache_rdd_ids() - before == set()  # every cached frame released
     assert summary["docs_in"] == 8
     assert summary["by_format"] == {"avi": 2, "wav": 1, "flac": 1, "gif": 1,
                                     "png": 1, "webp": 1, "unknown": 1}

@@ -144,6 +144,14 @@ def test_job_resume_and_retry(spark, docs_df, tmp_path):
     lrow = st.latest().filter(F.col("doc_id") == "fhead-000000").first()
     assert lrow.lineage.endswith("/fhead-000000/markdown")
     assert lrow.lineage.startswith("bucket-")
+    # the job repairs source_path encoding itself: spans_out and lineage
+    # carry the decoded CJK names, not the input's %XX escape or mojibake
+    want = {"fenc-000000": "文档-0", "fenc-000001": "文档报告-1", "fenc-000002": "数据分析-2"}
+    fenc = F.col("doc_id").startswith("fenc")
+    paths = {r.doc_id: r.source_path for r in spans_out.filter(fenc).collect()}
+    assert paths == {d: f"incoming/enc/{stem}.pdf" for d, stem in want.items()}
+    lineage = {r.doc_id: r.lineage for r in st.latest().filter(fenc).collect()}
+    assert {d: ln.split("/")[1] for d, ln in lineage.items()} == want
 
     # per-partition metrics (A3) and status summary (A1)
     pm = partition_metrics(st)

@@ -35,6 +35,40 @@ def test_extraction_single_arrow_hop(spark):
     assert plan.count("ArrowEvalPython") == 1  # fold fused into the UDF
 
 
+def test_extraction_job_runs_one_arrow_node_per_branch(spark, tmp_path, monkeypatch):
+    """Every pandas-UDF node costs each of its tasks worker set-up, so the
+    job's source_path repair must share the extraction UDF's Arrow node:
+    on a fresh run, a resumed run and a max_docs run, each ArrowEvalPython
+    node of the output write evaluates both UDFs, one node per branch."""
+    from documentconvert_spark import tableio
+    from documentconvert_spark.pipeline import run_extraction_job
+    from documentconvert_spark.state import StateStore
+
+    outs = (str(tmp_path / "out"), str(tmp_path / "fresh_out"))
+    written = []
+    overwrite = tableio.overwrite_table
+
+    def capture(df, path):
+        if path.startswith(outs):
+            written.append(df)
+        overwrite(df, path)
+
+    monkeypatch.setattr(tableio, "overwrite_table", capture)
+    docs = spark.createDataFrame(corpus_rows(fixture_corpus()), schema=DOCUMENTS_RAW)
+    st = StateStore(spark, str(tmp_path / "state"))
+    run_extraction_job(spark, docs, outs[0], st, target_partitions=2, max_docs=5)
+    run_extraction_job(spark, docs, outs[0], st, target_partitions=2)  # resumed
+    fresh = StateStore(spark, str(tmp_path / "fresh_state"))
+    run_extraction_job(spark, docs, outs[1], fresh, target_partitions=2)
+    assert len(written) == 3
+    for df in written:
+        plan = _plan(df)
+        nodes = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+        assert nodes and len(nodes) == plan.count("_extract_batch("), plan
+        for ln in nodes:
+            assert "_fix_encoding_batch(" in ln and "_extract_batch(" in ln, ln
+
+
 def test_parquet_filter_pushdown(spark):
     df = (
         spark.read.parquet(f"{SF}/lineitem.parquet")
